@@ -8,7 +8,7 @@ re-expressed for the Spark engine. Batch/channel sizes disappear
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -29,29 +29,16 @@ class EngineConfig:
     # bounded regardless of data volume or grid skew
     divide_pandas_budget: int = 2_000_000
 
-    # hot-cell salting: cells whose row count exceeds
-    # `bucket_max_records` get `ceil(count / bucket_max_records)` salts
-    salt_hash_cols: tuple[str, ...] = ("id",)
-
     # tile pyramid
     tile_zoom: int = 12
-    raster_tile_px: int = 256
 
     # kNN
-    knn_default_k: int = 5
     knn_max_ring: int = 4
 
     # dedup
     minhash_perms: int = 64
     minhash_bands: int = 16
     shingle_size: int = 5
-    simhash_bits: int = 64
-
-    # write layout — the eyros branch_factor/max_records analog: target
-    # rows per output file so parquet row-group stats prune well
-    target_file_rows: int = 500_000
-
-    extra: dict = field(default_factory=dict)
 
 
 DEFAULT = EngineConfig()

@@ -173,11 +173,6 @@ def _huff_codes(spec) -> "dict[int, tuple[int, int]]":
     return codes
 
 
-def _huff_decode_table(spec) -> "dict[tuple[int, int], int]":
-    """(BITS, HUFFVAL) -> {(length, code): symbol}."""
-    return {(ln, c): sym for sym, (c, ln) in _huff_codes(spec).items()}
-
-
 _LUT_CACHE: dict = {}
 
 
@@ -269,14 +264,6 @@ class _BitReader:
         self.nbits -= ln
         self.acc &= (1 << self.nbits) - 1
         return val >> 5
-
-
-def _extend(raw: int, size: int) -> int:
-    if size == 0:
-        return 0
-    if raw < (1 << (size - 1)):
-        return raw - (1 << size) + 1
-    return raw
 
 
 def _magnitude(v: int) -> "tuple[int, int]":

@@ -38,23 +38,6 @@ def char_shingles(text: str, n: int = 5) -> np.ndarray:
     return np.unique(hashes)
 
 
-def word_shingles(text: str, n: int = 3) -> np.ndarray:
-    """Distinct word n-gram hashes."""
-    words = [w for w in "".join(c.lower() if c.isalnum() else " " for c in text).split() if w]
-    if not words:
-        return np.array([], dtype=np.uint64)
-    hs = np.array([hash_str(w) for w in words], dtype=np.uint64)
-    if len(hs) < n:
-        return np.unique(hs)
-    windows = np.lib.stride_tricks.sliding_window_view(hs, n)
-    mix = np.uint64(0x9E3779B97F4A7C15)
-    out = np.zeros(len(windows), dtype=np.uint64)
-    with np.errstate(over="ignore"):  # uint64 wraparound is the hash
-        for i in range(n):
-            out = (out ^ windows[:, i]) * mix
-    return np.unique(out)
-
-
 def hash_str(s: str, seed: int = 0) -> np.uint64:
     """Deterministic FNV-1a 64 of a string (no PYTHONHASHSEED dependence)."""
     h = np.uint64(0xCBF29CE484222325 ^ seed)

@@ -64,10 +64,6 @@ def digit_ratio(text: Column) -> Column:
     return _char_class_count(text, r"[0-9]") / F.greatest(F.length(text), F.lit(1))
 
 
-def upper_ratio(text: Column) -> Column:
-    return _char_class_count(text, r"[A-Z]") / F.greatest(F.length(text), F.lit(1))
-
-
 def _word_array(text: Column) -> Column:
     """Lower-cased letter-word array (shared by stopword ops)."""
     cleaned = F.regexp_replace(F.lower(text), r"[^a-z]+", " ")

@@ -356,7 +356,11 @@ def connected_components(
     # A self-loop would surface as a duplicated row rather than one —
     # harmless to both tiers (union-find and min-label are idempotent)
     # and unreachable from the dedup pair producers (strict a < b).
-    canon = edges.select(
+    # least/greatest skip NULLs, so a (null, x) edge would become the
+    # self-loop (x, x): an edge with a null end joins nothing, drop it.
+    canon = edges.where(
+        F.col(src).isNotNull() & F.col(dst).isNotNull()
+    ).select(
         F.least(F.col(src), F.col(dst)).alias("s"),
         F.greatest(F.col(src), F.col(dst)).alias("d"),
     ).distinct()
@@ -995,12 +999,3 @@ def embedding_cosine_pairs(
         .where(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
-
-
-def _cosine_expr(a: str, b: str):
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
-    return dot / (na * nb)

@@ -85,11 +85,6 @@ def with_feature_type(df: DataFrame, spark: SparkSession) -> DataFrame:
     return df
 
 
-def drop_place_other(df: DataFrame) -> DataFrame:
-    """F2 (reference src/lib.rs:61,148,221,324)."""
-    return df.where(F.col("feature_type") != F.lit(tg.place_other_id()))
-
-
 # ---------------------------------------------------------------- F5/F6
 
 def way_is_area_col(tags_col: Column, refs_col: Column) -> Column:

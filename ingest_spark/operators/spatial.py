@@ -38,7 +38,7 @@ import math
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, BooleanType, LongType
+from pyspark.sql.types import ArrayType, LongType
 from pyspark.sql.window import Window
 
 from ..config import DEFAULT, EngineConfig
@@ -215,11 +215,6 @@ def _ray_cast(px: np.ndarray, py: np.ndarray, xs, ys) -> np.ndarray:
             xint = (rxj - rx) * (y - ry) / (ryj - ry) + rx
         out[lo:hi] = (cond & (x < xint)).sum(axis=1) % 2 == 1
     return out
-
-
-@F.pandas_udf(BooleanType())
-def _pip_udf(px: pd.Series, py: pd.Series, xs: pd.Series, ys: pd.Series) -> pd.Series:
-    return pd.Series(_ray_cast(px.to_numpy(), py.to_numpy(), xs.to_list(), ys.to_list()))
 
 
 def _pip_col(px, py, xs, ys):

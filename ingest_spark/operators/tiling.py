@@ -18,11 +18,10 @@ Three layers:
    ``applyInPandas`` → bounded buckets (≤ n records each, the eyros
    subtree analog, src/lib.rs:526).
 
-3. ``salt_hot_cells`` + ``write_partitioned`` — the 100 TB path:
-   per-cell counts, explicit salting of cells over the bucket bound
-   (north_rule), range-repartition by (cell, salt) and a sorted write
-   so parquet row-group min/max stats prune bbox queries (the eyros
-   tree → file-stats mapping, SURVEY §1.3).
+3. ``salt_hot_cells`` — the 100 TB path: per-cell counts and
+   explicit salting of cells over the bucket bound (north_rule), so no
+   (cell, salt) group outgrows one task; the pipeline's optimize stage
+   commits the salted frame.
 
 Plus the web-mercator tile pyramid (raster ↔ vector tiles).
 """
@@ -861,25 +860,6 @@ def salt_hot_cells(
     ).drop("n_salts")
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    cell_col: str = "hex_cell",
-    cfg: EngineConfig = DEFAULT,
-    mode: str = "overwrite",
-) -> None:
-    """O1 sorted spatial write: range-repartition by (cell, salt) and
-    sort within partitions by (cell, id) so parquet row-group stats
-    prune bbox/cell queries (eyros tree layout analog)."""
-    salted = df if "salt" in df.columns else salt_hot_cells(df, cell_col, cfg)
-    (
-        salted.repartitionByRange(F.col(cell_col), F.col("salt"))
-        .sortWithinPartitions(cell_col, "id")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
 # ------------------------------------------------------- tile pyramid
 
 def with_tile_xyz(df: DataFrame, z: int, lon_col="minx", lat_col="miny") -> DataFrame:
@@ -1363,8 +1343,6 @@ def decode_mvt_payload_point_sums(payload: bytes):
     ~20× the per-feature Python loop on point tiles (round-8: the
     mvt_points_tiles query spent ~1.4 s/run decoding 3,431 tiles)."""
     import numpy as np
-
-    from ..functions import varint
 
     buf = np.frombuffer(payload, dtype=np.uint8)
     ends = np.nonzero(buf < 0x80)[0]

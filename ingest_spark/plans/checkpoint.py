@@ -17,6 +17,10 @@ Python (``plans/iceberg.py``: field-id schemas, Avro manifests,
 optimistic version commits) — with identical resume semantics
 (skip-complete, invalidate on upstream change) proven across all
 three by TestSnapshotBackendSeam.
+
+A stage runs one Spark action, its commit: the row count and content
+digest that go into the snapshot id are observed on the committed
+frame as it is written, and nothing is read back to learn them.
 """
 
 from __future__ import annotations
@@ -28,8 +32,10 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql import types as T
+
+from .metrics import MetricsCollector
 
 
 class SnapshotBackend:
@@ -39,7 +45,12 @@ class SnapshotBackend:
     in TestCheckpointResume) are shared by the parquet simulation and a
     future catalog adapter:
 
-    - ``commit``          → Iceberg table commit (atomic snapshot)
+    - ``commit``          → Iceberg table commit (atomic snapshot);
+                            writes ``df`` itself (run_stage reads an
+                            observation off that write) and returns
+                            the committed table, read back with the
+                            frame's own schema (no footer inference
+                            job)
     - ``read``            → catalog table load
     - ``is_complete``     → committed-snapshot existence check
     - ``merge_overwrite`` → ``MERGE INTO`` (delete matched keys, insert
@@ -49,7 +60,7 @@ class SnapshotBackend:
     the simulation derives a content-addressed id in run_stage (same
     invalidation power, documented there)."""
 
-    def commit(self, df: DataFrame, path: str, partition_by=None) -> None:
+    def commit(self, df: DataFrame, path: str, partition_by=None) -> DataFrame:
         raise NotImplementedError
 
     def read(self, spark: SparkSession, path: str) -> DataFrame:
@@ -80,6 +91,7 @@ class ParquetManifestBackend(SnapshotBackend):
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
+        return df.sparkSession.read.schema(df.schema).parquet(path)
 
     def _recover(self, path):
         """Heal a crash between merge_overwrite's two renames: if the
@@ -171,6 +183,8 @@ class SnapshotDirBackend(SnapshotBackend):
             writer = writer.partitionBy(*partition_by)
         writer.parquet(os.path.join(path, snap))
         self._swap(path, snap)
+        return df.sparkSession.read.schema(df.schema).parquet(
+            os.path.join(path, snap))
 
     def read(self, spark, path):
         cur = self._current(path)
@@ -191,8 +205,7 @@ class SnapshotDirBackend(SnapshotBackend):
         merged = target.join(delete_keys.select(key), key, "left_anti").unionByName(
             insert_rows.select(*target.columns)
         )
-        self.commit(merged, path)  # reads snap-N, writes snap-N+1
-        return self.read(spark, path)
+        return self.commit(merged, path)  # reads snap-N, writes snap-N+1
 
     def expire_snapshots(self, path: str, keep: int = 1) -> int:
         """Drop all but the newest ``keep`` snapshots (never the
@@ -288,12 +301,13 @@ def _digest_cols(out: DataFrame) -> list:
     return cols
 
 
-def _count_and_digest(out: DataFrame) -> tuple[int, str]:
-    """One pass: row count + an order-independent content digest
-    (sum of per-row xxhash64 over every hashable column). Folding this
-    into the snapshot id means an upstream re-run that happens to keep
-    the same row count and schema still invalidates its dependents."""
-    cols = _digest_cols(out)
+def _count_and_digest_aggs(df: DataFrame) -> list:
+    """Row count + an order-independent content digest (sum of per-row
+    xxhash64 over every hashable column), as aggregates for
+    ``DataFrame.observe``. Folding the digest into the snapshot id means
+    an upstream re-run that happens to keep the same row count and
+    schema still invalidates its dependents."""
+    cols = _digest_cols(df)
     agg = [F.count(F.lit(1)).alias("_n")]
     if cols:
         # decimal sum: exact and ANSI-safe (a long sum of 2^63-scale
@@ -301,8 +315,7 @@ def _count_and_digest(out: DataFrame) -> tuple[int, str]:
         agg.append(
             F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("_d")
         )
-    row = out.agg(*agg).first()
-    return int(row["_n"]), (str(row["_d"]) if cols else "nocols")
+    return agg
 
 
 def run_stage(
@@ -311,7 +324,6 @@ def run_stage(
     stage: str,
     fn: Callable[[], DataFrame],
     inputs: list[str] | None = None,
-    metrics: "object | None" = None,
     source_fingerprint: str | None = None,
     partition_by: list[str] | None = None,
     backend: SnapshotBackend | None = None,
@@ -326,8 +338,10 @@ def run_stage(
       reading external data MUST pass one, otherwise re-running against
       a different source on the same out_root silently returns stale
       output.
-    - on run: write parquet, count rows + content digest in one pass,
-      record snapshot + lineage.
+    - on run: the commit is the stage's only Spark action. Row count
+      and content digest ride it as a ``DataFrame.observe``
+      observation; the snapshot + lineage go to the manifest and the
+      per-file row counts (parquet footers) to ``{root}/_metrics``.
     """
     inputs = inputs or []
     backend = backend or DEFAULT_BACKEND
@@ -345,9 +359,12 @@ def run_stage(
 
     t0 = time.time()
     df = fn()
-    backend.commit(df, out_path, partition_by)
-    out = backend.read(spark, out_path)
-    rows, digest = _count_and_digest(out)
+    obs = Observation()
+    out = backend.commit(
+        df.observe(obs, *_count_and_digest_aggs(df)), out_path, partition_by
+    )
+    seen = obs.get
+    rows, digest = int(seen["_n"]), str(seen.get("_d", "nocols"))
     wall = time.time() - t0
 
     snap = _snapshot_id(stage, input_snaps, rows, out.schema.simpleString(), digest)
@@ -363,6 +380,5 @@ def run_stage(
         "wall_secs": round(wall, 3),
     }
     manifest.save()
-    if metrics is not None:
-        metrics.record_stage(spark, stage, out, snap, wall)
+    MetricsCollector(manifest.root).record_stage(stage, out, snap, wall)
     return out

@@ -640,10 +640,11 @@ class IcebergMetadataBackend(SnapshotBackend):
 
     # ------------------------------------------------ SnapshotBackend
 
-    def commit(self, df: DataFrame, path: str, partition_by=None) -> None:
+    def commit(self, df: DataFrame, path: str, partition_by=None) -> DataFrame:
         """Replace the table contents with ``df`` as one snapshot
-        (operation=overwrite after the first append). Data files are
-        written once; publication retries on version conflicts."""
+        (operation=overwrite after the first append) and return the
+        table read back. Data files are written once; publication
+        retries on version conflicts."""
         files = self._stage_data_files(df, path, partition_by)
         for _attempt in range(self.max_retries):
             md = self.current_metadata(path)
@@ -661,7 +662,7 @@ class IcebergMetadataBackend(SnapshotBackend):
                                       deleted_entries=dead)
             try:
                 self._publish(path, md)
-                return
+                return self.read(df.sparkSession, path)
             except CommitConflict:
                 continue
         raise CommitConflict(
@@ -773,58 +774,38 @@ class IcebergMetadataBackend(SnapshotBackend):
                 for e in self._live_entries(md, snapshot_id)]
 
     def _read_files(self, spark: SparkSession, md: dict, files: list):
-        if not files:
-            schema = T.StructType.fromJson(
-                json.loads(md["properties"]["spark.schema"]))
-            return spark.createDataFrame([], schema)
-        spec = md["partition-specs"][md["default-spec-id"]]["fields"]
+        """Scan ``files`` with the table's stored schema: no footer
+        inference job, and files written under an older (additively
+        evolved) schema read the newer columns as null."""
         schema = T.StructType.fromJson(
             json.loads(md["properties"]["spark.schema"]))
-        reader = spark.read
-        evolved = len(md["schemas"]) > 1
-        if evolved:
-            # files written under older schemas lack the new columns;
-            # mergeSchema unions footers, missing values read as null
-            reader = reader.option("mergeSchema", "true")
-        if spec:
-            # partition columns live in the dir names: basePath makes
-            # Spark re-derive them, then we normalize dtypes from the
-            # stored schema (partition-dir inference widens types).
-            # Live files span one staging dir PER COMMIT (append /
-            # file-level merge), so group by staging dir — a single
-            # commonpath basePath would put the token dirs themselves
-            # in the discovered layout ("conflicting directory
-            # structures"). A handful of unioned scans per table;
-            # AQE coalesces them.
-            groups: "dict[str, list[str]]" = {}
-            for f in files:
-                d = os.path.dirname(f)
-                while "=" in os.path.basename(d):
-                    d = os.path.dirname(d)
-                groups.setdefault(d, []).append(f)
-            parts = []
-            for base in sorted(groups):
-                df = reader.option("basePath", base).parquet(
-                    *groups[base])
-                have = set(df.columns)
-                parts.append(df.select(*[
-                    (F.col(f.name).cast(f.dataType) if f.name in have
-                     else F.lit(None).cast(f.dataType)).alias(f.name)
-                    for f in schema.fields
-                ]))
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
-        df = reader.parquet(*files)
-        if evolved:
-            have = set(df.columns)
-            return df.select(*[
-                (F.col(f.name).cast(f.dataType) if f.name in have
-                 else F.lit(None).cast(f.dataType)).alias(f.name)
-                for f in schema.fields
-            ])
-        return df
+        if not files:
+            return spark.createDataFrame([], schema)
+        reader = spark.read.schema(schema)
+        if not md["partition-specs"][md["default-spec-id"]]["fields"]:
+            return reader.parquet(*files)
+        # partition columns live in the dir names: basePath makes Spark
+        # re-derive them, typed by the stored schema. Live files span
+        # one staging dir PER COMMIT (append / file-level merge), so
+        # group by staging dir — a single commonpath basePath would put
+        # the token dirs themselves in the discovered layout
+        # ("conflicting directory structures"). A handful of unioned
+        # scans per table; AQE coalesces them.
+        groups: "dict[str, list[str]]" = {}
+        for f in files:
+            d = os.path.dirname(f)
+            while "=" in os.path.basename(d):
+                d = os.path.dirname(d)
+            groups.setdefault(d, []).append(f)
+        parts = [
+            reader.option("basePath", base).parquet(*groups[base])
+            .select(*schema.names)
+            for base in sorted(groups)
+        ]
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return out
 
     def read(self, spark: SparkSession, path: str) -> DataFrame:
         md = self.current_metadata(path)

@@ -1,27 +1,31 @@
-"""Per-stage lineage + per-partition row-count metrics (north_rule).
+"""Per-stage lineage + per-file row-count metrics (north_rule).
 
 The reference's progress subsystem (/root/reference/src/progress.rs)
-tracks per-stage counts and rolling rates, printed at 1 Hz
-(src/bin.rs:385-428). Re-expressed for Spark:
+counts rows per stage inline, as the elements flow past, and never
+makes a second pass to learn what it wrote. Re-expressed for Spark:
 
-- per-partition row counts via ``spark_partition_id()`` aggregation
-  (A5: the element_counter / scan-count analog, src/lib.rs:130,143,
-  progress.rs:31-35);
-- per-stage wall time + derived throughput (A6 rate analog — the
-  rolling window becomes a lag() over the persisted metrics table);
-- lineage: stage name + snapshot id + input stages recorded per row.
+- per-file row counts read from the parquet footers of a stage's
+  committed files (A5: the element_counter / scan-count analog,
+  src/lib.rs:130,143, progress.rs:31-35). One row of the table is one
+  written file, i.e. the output of one write task; recording it runs
+  no Spark job;
+- per-stage wall time + derived throughput (A6 end-state rate);
+- lineage: stage name + snapshot id recorded per row.
 
-Metrics are appended to a parquet table — queryable like any other
-table (the observability analog of eyros' monitor output).
+Metrics are appended as parquet files under ``{root}/_metrics`` —
+queryable like any other table (the observability analog of eyros'
+monitor output). Its columns and types are the ones the earlier
+Spark-written layout had, so old and new files read together.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
 
 
 class MetricsCollector:
@@ -29,24 +33,42 @@ class MetricsCollector:
         self.path = os.path.join(root, "_metrics")
 
     def record_stage(
-        self, spark: SparkSession, stage: str, df: DataFrame, snapshot_id: str, wall_secs: float
+        self, stage: str, df: DataFrame, snapshot_id: str, wall_secs: float
     ) -> None:
-        per_part = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("rows"))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("snapshot_id", F.lit(snapshot_id))
-            .withColumn("wall_secs", F.lit(float(wall_secs)))
-            .withColumn("recorded_at", F.lit(int(time.time())))
-        )
-        per_part.write.mode("append").parquet(self.path)
+        """Append one row per file behind the committed ``df``: its
+        write task's partition id (from the ``part-NNNNN`` file name)
+        and its row count (from the footer)."""
+        import pyarrow as pa
+        import pyarrow.fs as pafs
+        import pyarrow.parquet as pq
+
+        parts, rows = [], []
+        for i, uri in enumerate(sorted(df.inputFiles())):
+            fs, path = pafs.FileSystem.from_uri(uri)
+            m = re.match(r"part-(\d+)", os.path.basename(path))
+            parts.append(int(m.group(1)) if m else i)
+            rows.append(pq.read_metadata(path, filesystem=fs).num_rows)
+        n = len(rows)
+        table = pa.table({
+            "partition_id": pa.array(parts, pa.int32()),
+            "rows": pa.array(rows, pa.int64()),
+            "stage": pa.array([stage] * n, pa.string()),
+            "snapshot_id": pa.array([snapshot_id] * n, pa.string()),
+            "wall_secs": pa.array([float(wall_secs)] * n, pa.float64()),
+            "recorded_at": pa.array([int(time.time())] * n, pa.int32()),
+        })
+        os.makedirs(self.path, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.path, "_" + name)  # readers skip "_" files
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(self.path, name))
 
     def load(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.path)
 
     def stage_summary(self, spark: SparkSession) -> DataFrame:
-        """stage → rows, partitions, wall, rows/sec (A6 end-state rate:
-        count/duration, progress.rs:104-116)."""
+        """stage → rows, files (``partitions``), wall, rows/sec (A6
+        end-state rate: count/duration, progress.rs:104-116)."""
         m = self.load(spark)
         return (
             m.groupBy("stage", "snapshot_id")
@@ -58,24 +80,3 @@ class MetricsCollector:
             )
             .withColumn("rows_per_sec", F.col("rows") / F.col("wall_secs"))
         )
-
-    def rate_series(self, spark: SparkSession) -> DataFrame:
-        """Rolling rate over successive snapshots of the same stage
-        (Δrows/Δt — the 20-sample ring-buffer analog, progress.rs:80-97)."""
-        s = (
-            self.load(spark)
-            .groupBy("stage", "snapshot_id", "recorded_at")
-            .agg(F.sum("rows").alias("rows"))
-        )
-        w = Window.partitionBy("stage").orderBy("recorded_at")
-        return s.withColumn(
-            "rate",
-            (F.col("rows") - F.lag("rows").over(w))
-            / (F.col("recorded_at") - F.lag("recorded_at").over(w)),
-        )
-
-
-def observed(df: DataFrame, name: str) -> DataFrame:
-    """Attach a named observation (count + bytes hint) the driver can
-    read post-action — zero-cost accumulator-style metrics."""
-    return df.observe(name, F.count(F.lit(1)).alias("rows"))

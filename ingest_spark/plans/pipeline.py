@@ -8,7 +8,9 @@
                    (the --optimize re-partition pass, O1-O4)
 
 Each stage is resumable via the snapshot manifest (plans/checkpoint.py)
-and records per-partition lineage metrics (plans/metrics.py).
+and runs one Spark action, its commit; the commit carries the stage's
+row count and digest, and the per-file row counts in the lineage
+metrics (plans/metrics.py) come from the written files' footers.
 Run it via ``spark-submit --py-files pipeline.zip jobs/ingest_job.py``.
 """
 
@@ -25,7 +27,6 @@ from ..operators.spatial import with_cells
 from ..operators.tiling import quadtree_partition, salt_hot_cells, with_tile_xyz
 from ..sources import scan as scan_src
 from .checkpoint import Manifest, run_stage
-from .metrics import MetricsCollector
 
 
 @dataclass
@@ -64,7 +65,6 @@ def run_ingest(
     backend=None,
 ) -> PipelineResult:
     manifest = Manifest.load(out_root)
-    metrics = MetricsCollector(out_root)
     # root stages must know their source: a re-run against a different
     # pages table on the same out_root re-extracts instead of silently
     # returning stale parquet
@@ -80,7 +80,7 @@ def run_ingest(
     # — our "offsets" are the etype partitions).
     elements = run_stage(
         spark, manifest, "extract",
-        lambda: extract.parse_all(pages), inputs=[], metrics=metrics,
+        lambda: extract.parse_all(pages), inputs=[],
         source_fingerprint=src_fp, partition_by=["etype"],
         backend=backend,
     )
@@ -91,7 +91,6 @@ def run_ingest(
         spark, manifest, "scan",
         lambda: scan_src.element_stats(nodes, ways, relations),
         inputs=["extract"],
-        metrics=metrics,
         backend=backend,
     )
 
@@ -108,7 +107,6 @@ def run_ingest(
     features = run_stage(
         spark, manifest, "ingest", _ingest,
         inputs=["extract", "scan"],
-        metrics=metrics,
         backend=backend,
     )
 
@@ -124,7 +122,7 @@ def run_ingest(
 
         optimized = run_stage(
             spark, manifest, "optimize", _optimize, inputs=["ingest"],
-            metrics=metrics, backend=backend,
+            backend=backend,
         )
 
     return PipelineResult(manifest=manifest, features=features, optimized=optimized)

@@ -18,6 +18,28 @@ import os
 
 from pyspark.sql import SparkSession
 
+DRIVER_MEM_CAP_MB = 24 * 1024
+
+
+def driver_memory(meminfo: str) -> str:
+    """Default ``spark.driver.memory`` for a host whose /proc/meminfo
+    reads ``meminfo``: half of MemTotal, capped at 24g. In local mode
+    the driver JVM hosts the executors too, so a heap above the host's
+    RAM gets the JVM killed by the kernel instead of spilling."""
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            total_mb = int(line.split()[1]) // 1024  # reported in kB
+            return f"{min(total_mb // 2, DRIVER_MEM_CAP_MB)}m"
+    return f"{DRIVER_MEM_CAP_MB}m"
+
+
+def _default_driver_memory() -> str:
+    try:
+        with open("/proc/meminfo") as f:
+            return driver_memory(f.read())
+    except OSError:
+        return f"{DRIVER_MEM_CAP_MB}m"
+
 
 def get_spark(
     master: str | None = None,
@@ -64,7 +86,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

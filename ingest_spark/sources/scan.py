@@ -14,7 +14,7 @@ testable, and (c) it doubles as the lineage row-count source.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def element_stats(nodes: DataFrame, ways: DataFrame, relations: DataFrame) -> DataFrame:
@@ -37,15 +37,6 @@ def element_stats(nodes: DataFrame, ways: DataFrame, relations: DataFrame) -> Da
         .unionByName(one(relations, "relation"))
         .select("etype", "partition_id", "min_id", "max_id", "n")
     )
-
-
-def save_stats(stats: DataFrame, path: str) -> None:
-    """S3 persist (scan-file analog)."""
-    stats.write.mode("overwrite").parquet(path)
-
-
-def load_stats(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def prune_partitions(stats: DataFrame, needed_ids: DataFrame, etype: str) -> DataFrame:

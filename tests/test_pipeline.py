@@ -159,13 +159,66 @@ class TestCheckpointResume:
 
     def test_metrics_recorded(self, spark, pages, tmp_path):
         root = str(tmp_path / "pipe_m")
-        run_ingest(spark, pages, root, EngineConfig(), optimize_grid=None)
+        res = run_ingest(spark, pages, root, EngineConfig(), optimize_grid=None)
         mc = MetricsCollector(root)
         summary = mc.stage_summary(spark)
         stages = {r.stage for r in summary.collect()}
         assert {"scan", "ingest"} <= stages
         row = summary.where(F.col("stage") == "ingest").first()
         assert row.rows > 0 and row.partitions >= 1 and row.rows_per_sec > 0
+        # per stage, the per-file rows add up to the manifest's count
+        assert {r.stage: r.rows for r in summary.collect()} == {
+            s: e["rows"] for s, e in res.manifest.stages.items()
+        }
+
+    @pytest.mark.parametrize("bname", ["parquet", "snapdir", "iceberg"])
+    def test_stage_summary_per_written_file(self, spark, tmp_path, bname):
+        """One metrics row per committed file, partitioned stages
+        included, and the stage's rows equal the manifest's."""
+        backend = _make_backend(bname)
+        root = str(tmp_path / "ck")
+        m = Manifest.load(root)
+        out = run_stage(
+            spark, m, "a",
+            lambda: spark.range(0, 30, numPartitions=3).withColumn(
+                "k", (F.col("id") % 2).cast("string")),
+            partition_by=["k"], backend=backend,
+        )
+        run_stage(spark, m, "b", lambda: spark.range(7), inputs=["a"], backend=backend)
+        summary = {r.stage: r for r in MetricsCollector(root).stage_summary(spark).collect()}
+        assert {s: r.rows for s, r in summary.items()} == {"a": 30, "b": 7}
+        assert {s: e["rows"] for s, e in m.stages.items()} == {"a": 30, "b": 7}
+        assert summary["a"].partitions == len(out.inputFiles())
+        assert summary["a"].snapshot_id == m.snapshot_of("a")
+
+    def test_stage_summary_reads_old_spark_written_layout(self, spark, tmp_path):
+        """A _metrics directory that also holds a file in the layout the
+        metrics table had when Spark wrote it (per spark_partition_id
+        aggregate) still reads as one table."""
+        import time
+
+        root = str(tmp_path / "ck")
+        (
+            spark.range(0, 12, numPartitions=3)
+            .groupBy(F.spark_partition_id().alias("partition_id"))
+            .agg(F.count("*").alias("rows"))
+            .withColumn("stage", F.lit("old"))
+            .withColumn("snapshot_id", F.lit("0123456789abcdef"))
+            .withColumn("wall_secs", F.lit(2.0))
+            .withColumn("recorded_at", F.lit(int(time.time())))
+            .write.mode("append").parquet(os.path.join(root, "_metrics"))
+        )
+        m = Manifest.load(root)
+        run_stage(spark, m, "new", lambda: spark.range(0, 5, numPartitions=1))
+        mc = MetricsCollector(root)
+        assert mc.load(spark).schema.simpleString() == (
+            "struct<partition_id:int,rows:bigint,stage:string,"
+            "snapshot_id:string,wall_secs:double,recorded_at:int>"
+        )
+        summary = {r.stage: r for r in mc.stage_summary(spark).collect()}
+        assert summary["old"].rows == 12 and summary["old"].partitions == 3
+        assert summary["new"].rows == 5 and summary["new"].partitions == 1
+        assert summary["new"].snapshot_id == m.snapshot_of("new")
 
 
 class TestStreaming:
@@ -420,17 +473,45 @@ class TestSnapshotBackendSeam:
         """A tags-only (MapType) value change must change the content
         digest — maps drive classification, so skipping them would fail
         to invalidate dependents."""
-        from ingest_spark.plans.checkpoint import _count_and_digest
+        snaps = []
+        for i, v in enumerate(("v1", "v2")):
+            m = Manifest.load(str(tmp_path / f"ck{i}"))
+            run_stage(spark, m, "s", lambda v=v: spark.createDataFrame(
+                [(1, {"k": v})], "id long, tags map<string,string>"
+            ))
+            snaps.append(m.snapshot_of("s"))
+        assert snaps[0] != snaps[1]
 
-        a = spark.createDataFrame(
-            [(1, {"k": "v1"})], "id long, tags map<string,string>"
-        )
-        b = spark.createDataFrame(
-            [(1, {"k": "v2"})], "id long, tags map<string,string>"
-        )
-        _, da = _count_and_digest(a)
-        _, db = _count_and_digest(b)
-        assert da != db
+    @pytest.mark.parametrize("bname", ["parquet", "snapdir", "iceberg"])
+    def test_run_stage_runs_no_job_beyond_the_commit(self, spark, tmp_path, bname):
+        """Count, digest, manifest and metrics ride the commit: under
+        its own job group, run_stage runs no more Spark jobs than the
+        backend's commit of the same frame alone."""
+        backend = _make_backend(bname)
+        sc = spark.sparkContext
+
+        def frame():
+            return spark.range(0, 40, numPartitions=4).withColumn(
+                "tags", F.create_map(F.lit("k"), F.col("id").cast("string"))
+            )
+
+        def jobs(group, action):
+            sc.setJobGroup(group, group)
+            try:
+                action()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        commit_jobs = jobs(f"{tmp_path.name}-commit", lambda: backend.commit(
+            frame(), str(tmp_path / "plain")))
+        m = Manifest.load(str(tmp_path / "ck"))
+        stage_jobs = jobs(f"{tmp_path.name}-stage", lambda: run_stage(
+            spark, m, "s", frame, backend=backend))
+        assert commit_jobs >= 1
+        assert stage_jobs <= commit_jobs
+        assert m.stages["s"]["rows"] == 40
 
     def test_pages_fingerprint_sees_content(self, spark):
         """Editing page text in place (keys unchanged) must change the

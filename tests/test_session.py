@@ -1,0 +1,20 @@
+"""Session defaults that depend on the host."""
+
+from ingest_spark.session import driver_memory
+
+MEMINFO_15G = """MemTotal:       15995440 kB
+MemFree:        14313108 kB
+MemAvailable:   15271016 kB
+"""
+
+
+def test_driver_memory_is_half_of_memtotal():
+    assert driver_memory(MEMINFO_15G) == f"{15995440 // 1024 // 2}m"
+
+
+def test_driver_memory_capped_at_24g():
+    assert driver_memory("MemTotal:       263855104 kB\n") == "24576m"
+
+
+def test_driver_memory_without_memtotal_keeps_the_cap():
+    assert driver_memory("MemFree:        1024 kB\n") == "24576m"

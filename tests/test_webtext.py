@@ -785,6 +785,19 @@ class TestConnectedComponents:
              for r in connected_components(edges, driver_threshold=0).collect()}
         assert a == b
 
+    @pytest.mark.parametrize("driver_threshold", [200_000, 0])
+    def test_null_endpoint_edges_are_dropped(self, spark, driver_threshold):
+        """An edge with a null end connects nothing: (null, 9) must not
+        turn into the self-loop (9, 9) and make 9 a node, in either tier."""
+        from ingest_spark.operators.dedup import connected_components
+
+        edges = spark.createDataFrame(
+            [(1, 2), (None, 9), (7, None), (None, None)], "src long, dst long"
+        )
+        comp = {r.node: r.component for r in connected_components(
+            edges, driver_threshold=driver_threshold).collect()}
+        assert comp == {1: 1, 2: 1}
+
     def test_exact_vs_onehop_difference(self, spark):
         """The scenario one-hop dedup gets wrong: A~B and B~C without
         A~C. Components must merge all three."""
