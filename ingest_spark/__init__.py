@@ -16,4 +16,6 @@ Architecture is Spark-first: declarative DataFrame plans optimized by
 Catalyst; Python only in vectorized pandas/Arrow UDF kernels.
 """
 
+from . import zipgate  # noqa: F401  (stat-gates Python workers' zip re-reads)
+
 __version__ = "0.1.0"

@@ -166,13 +166,15 @@ def divide(
 
 # -------------------------------------------- distributed quadtree job
 
-def global_bounds(features: DataFrame) -> tuple[float, float, float, float]:
-    """A3 (reference src/lib.rs:413-425)."""
+def global_bounds(features: DataFrame) -> tuple[tuple[float, float, float, float], int]:
+    """A3 (reference src/lib.rs:413-425): the bounds and the row count,
+    from one aggregate."""
     r = features.agg(
         F.min("minx").alias("x0"), F.min("miny").alias("y0"),
         F.max("maxx").alias("x1"), F.max("maxy").alias("y1"),
+        F.count(F.lit(1)).alias("rows"),
     ).first()
-    return (r.x0, r.y0, r.x1, r.y1)
+    return (r.x0, r.y0, r.x1, r.y1), r.rows
 
 
 def _grid_boxes(bounds, gx: int, gy: int):
@@ -274,7 +276,7 @@ def _divide_cells_in_pandas(
     a hard error instead of a silent OOM risk."""
     out_schema = StructType(with_cell.schema.fields + _QT_OUT_EXTRA)
 
-    def _divide_cell(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _divide_cell(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         cell = int(key[0])
         if len(pdf) > budget:
             raise RuntimeError(
@@ -543,9 +545,11 @@ def quadtree_partition(
     n = bucket_max or cfg.bucket_max_records
     budget = max(pandas_budget if pandas_budget is not None else cfg.divide_pandas_budget, n)
     depth_limit = cfg.divide_depth_limit
-    bounds = global_bounds(features)
+    bounds, rows = global_bounds(features)
     boxes = _grid_boxes(bounds, gx, gy)
     with_cell = assign_grid_cell(features, bounds, gx, gy)
+    if rows <= budget:  # no cell can be over budget: skip the per-cell count
+        return _divide_cells_in_pandas(with_cell, boxes, n, depth_limit, budget)
 
     cell_rows = {
         int(r["grid_cell"]): int(r["cnt"])
@@ -714,7 +718,7 @@ def _quadtree_distributed(
             return_paths=True,
         )
 
-    def _divide_node(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _divide_node(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         cell, node = int(key[0]), key[1]
         buckets = _run_divide(cell, node, pdf)
         pdf = pdf.drop(columns=["_node"]).reset_index(drop=True)
@@ -746,7 +750,7 @@ def _quadtree_distributed(
         StructField("lmaxy", DoubleType(), False),
     ])
 
-    def _divide_meta(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _divide_meta(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         cell, node = int(key[0]), key[1]
         buckets = _run_divide(cell, node, pdf)
         return pd.DataFrame({
@@ -920,7 +924,7 @@ def vector_tiles(features: DataFrame, z: int) -> DataFrame:
     by id, payloads concatenated with a little header (deterministic)."""
     tiled = with_tile_xyz(features, z)
 
-    def _pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("id")
         buf = io.BytesIO()
         for payload in pdf["encoded"]:
@@ -967,7 +971,7 @@ def raster_tiles(features: DataFrame, z: int, px: int = 256) -> DataFrame:
 
     n = float(2 ** z)
 
-    def _rasterize(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _rasterize(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tz, tx, ty = int(key[0]), int(key[1]), int(key[2])
         # tile bounds in lon / mercator-y
         lon0 = tx / n * 360.0 - 180.0
@@ -1299,7 +1303,7 @@ def mvt_tiles(
 
     feats = fanned.mapInPandas(_encode_batches, _MVT_FEAT_SCHEMA)
 
-    def _pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("id")
         buf = io.BytesIO()
         buf.write(varint.encode(len(pdf)))

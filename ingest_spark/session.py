@@ -67,12 +67,10 @@ def get_spark(
     if pkg_root not in pp.split(":"):
         os.environ["PYTHONPATH"] = f"{pkg_root}:{pp}" if pp else pkg_root
 
-    # shuffle/spill dirs: RAM-backed tmpfs when available (the sandbox's
-    # virtio disk caps at ~700MB/s single-queue, which would serialize
-    # shuffle IO); on a real cluster this is node-local NVMe
+    # shuffle/spill dirs: Spark's own default (SPARK_LOCAL_DIRS, else
+    # java.io.tmpdir) unless SPARK_GRAFT_LOCAL_DIR names one, e.g. a
+    # tmpfs when the host's RAM can hold the spill next to the heap
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if local_dir is None and os.path.isdir("/dev/shm"):
-        local_dir = "/dev/shm/spark_local"
 
     builder = (
         SparkSession.builder.master(master)

@@ -17,3 +17,21 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(group, action)`` runs ``action`` under job group
+    ``group`` and returns the number of Spark jobs it started."""
+    sc = spark.sparkContext
+
+    def count(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -483,31 +483,23 @@ class TestSnapshotBackendSeam:
         assert snaps[0] != snaps[1]
 
     @pytest.mark.parametrize("bname", ["parquet", "snapdir", "iceberg"])
-    def test_run_stage_runs_no_job_beyond_the_commit(self, spark, tmp_path, bname):
+    def test_run_stage_runs_no_job_beyond_the_commit(
+        self, spark, tmp_path, bname, count_jobs
+    ):
         """Count, digest, manifest and metrics ride the commit: under
         its own job group, run_stage runs no more Spark jobs than the
         backend's commit of the same frame alone."""
         backend = _make_backend(bname)
-        sc = spark.sparkContext
 
         def frame():
             return spark.range(0, 40, numPartitions=4).withColumn(
                 "tags", F.create_map(F.lit("k"), F.col("id").cast("string"))
             )
 
-        def jobs(group, action):
-            sc.setJobGroup(group, group)
-            try:
-                action()
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-                sc.setLocalProperty("spark.job.description", None)
-            return len(sc.statusTracker().getJobIdsForGroup(group))
-
-        commit_jobs = jobs(f"{tmp_path.name}-commit", lambda: backend.commit(
+        commit_jobs = count_jobs(f"{tmp_path.name}-commit", lambda: backend.commit(
             frame(), str(tmp_path / "plain")))
         m = Manifest.load(str(tmp_path / "ck"))
-        stage_jobs = jobs(f"{tmp_path.name}-stage", lambda: run_stage(
+        stage_jobs = count_jobs(f"{tmp_path.name}-stage", lambda: run_stage(
             spark, m, "s", frame, backend=backend))
         assert commit_jobs >= 1
         assert stage_jobs <= commit_jobs

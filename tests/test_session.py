@@ -1,5 +1,9 @@
 """Session defaults that depend on the host."""
 
+import os
+
+import pytest
+
 from ingest_spark.session import driver_memory
 
 MEMINFO_15G = """MemTotal:       15995440 kB
@@ -18,3 +22,8 @@ def test_driver_memory_capped_at_24g():
 
 def test_driver_memory_without_memtotal_keeps_the_cap():
     assert driver_memory("MemFree:        1024 kB\n") == "24576m"
+
+
+@pytest.mark.skipif("SPARK_GRAFT_LOCAL_DIR" in os.environ, reason="spill dir chosen by the caller")
+def test_spill_dir_left_to_spark_by_default(spark):
+    assert spark.sparkContext.getConf().get("spark.local.dir") is None

@@ -1,5 +1,7 @@
 """Quadtree divide (exact reference semantics), salting, tile pyramid."""
 
+import warnings
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -116,6 +118,17 @@ class TestQuadtreeJob:
         # single assignment invariant (no J9 duplicates)
         assert out.select("id").distinct().count() == 2000
 
+    def test_under_budget_runs_no_job_beyond_the_bounds(self, feats, count_jobs):
+        """Under the pandas budget no grid cell can exceed it, so the
+        plan is built from the bounds aggregate alone, with no per-cell
+        count job evaluating the grid UDF an extra time."""
+        assert tiling.global_bounds(feats)[1] == 2000  # also fills the cache
+        bounds_jobs = count_jobs("qt-bounds", lambda: tiling.global_bounds(feats))
+        qt_jobs = count_jobs("qt-plan", lambda: tiling.quadtree_partition(
+            feats, EngineConfig(), gx=2, gy=2, bucket_max=100))
+        assert bounds_jobs >= 1
+        assert qt_jobs == bounds_jobs
+
     def test_salting_bounds_hot_cells(self, spark, feats):
         df = feats.withColumn("hex_cell", F.lit(1))  # everything in one hot cell
         salted = tiling.salt_hot_cells(df, "hex_cell", bucket_max=250)
@@ -157,6 +170,17 @@ class TestTilePyramid:
         payload = bytes(paris.payload)
         # length-prefixed concat, sorted by id: \x03 then b"\x01aa" first
         assert payload == b"\x03\x00\x00\x00\x01aa\x03\x00\x00\x00\x01bb"
+
+    def test_tile_packers_emit_no_user_warning(self, spark, feats):
+        geoms = spark.createDataFrame(
+            [(1, "point", [2.35], [48.86])],
+            "id long, gtype string, xs array<double>, ys array<double>")
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            tiling.vector_tiles(feats, 8)
+            tiling.raster_tiles(feats, 12, px=64)
+            tiling.mvt_tiles(geoms, z=6)
+        assert [w for w in caught if issubclass(w.category, UserWarning)] == []
 
     def test_raster_roundtrip(self, spark, feats):
         r = tiling.raster_tiles(feats, 12, px=64)
@@ -301,6 +325,23 @@ class TestQuadtreeDistributed:
         assert out.count() == 400
         buckets = out.groupBy("grid_cell", "bucket").count().collect()
         assert len(buckets) == 1 and buckets[0]["count"] == 400
+
+    @pytest.mark.parametrize("budget", [None, 120])
+    def test_optimize_pass_emits_no_user_warning(self, spark, feats, budget):
+        """The grouped-map kernels carry complete type hints, so
+        applyInPandas infers the grouped-map pandas eval type instead of
+        warning that it cannot (per-cell divide at the default budget,
+        the distributed pre-split at the forced one)."""
+        cfg = EngineConfig()
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            qt = tiling.quadtree_partition(
+                feats.withColumn("hex_cell", F.col("id") % 7), cfg,
+                gx=2, gy=2, bucket_max=50, pandas_budget=budget,
+            )
+            salted = tiling.salt_hot_cells(qt, "hex_cell", cfg)
+            assert tiling.with_tile_xyz(salted, cfg.tile_zoom).count() == 3000
+        assert [w for w in caught if issubclass(w.category, UserWarning)] == []
 
 
 class TestQuadtreeDistributedProperty:
