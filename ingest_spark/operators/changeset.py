@@ -20,7 +20,10 @@ Spark-first shape — an Iceberg ``MERGE INTO`` keyed on feature id:
 3. recompute features for the affected subset only (the full element
    tables feed the joins, but the build is semi-join-pruned to the
    closure — at 10^12 scale this touches a sliver of the data);
-4. merge: old features ∖ affected ∪ recomputed.
+4. merge: old features ∖ affected ∪ recomputed. On a table that
+   carries cell columns (the ingest table ``run_ingest`` writes), the
+   recomputed slice gets them from ``with_cells`` with the same
+   ``EngineConfig``.
 
 Join sizing: the closure id frames are usually tiny next to the element
 tables, so AQE picks broadcast sides at runtime; no broadcast() hints
@@ -32,6 +35,8 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..config import DEFAULT, EngineConfig
 
 
 @dataclass
@@ -77,6 +82,7 @@ def apply_changeset(
     ways: DataFrame,
     relations: DataFrame,
     cs: Changeset,
+    cfg: EngineConfig = DEFAULT,
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """Returns (features', nodes', ways', relations')."""
     changed_nodes = _changed_ids(spark, cs.nodes_upsert, cs.node_deletes)
@@ -111,6 +117,7 @@ def apply_changeset(
 
     # ---- recompute the affected slice only (semi-join pruning)
     from .features import node_features, relation_features, way_features
+    from .spatial import with_cells
 
     recomputed = node_features(nodes2.join(changed_nodes, "id", "left_semi"), spark)
     # pruned ways join against the FULL node table (unchanged member
@@ -121,6 +128,8 @@ def apply_changeset(
     recomputed = recomputed.unionByName(
         relation_features(rels2.join(changed_rels, "id", "left_semi"), ways2, nodes2, spark)
     )
+    if "hex_cell" in features.columns:
+        recomputed = with_cells(recomputed, cfg)
 
     # MERGE: drop every affected feature id (deleted ones stay dropped),
     # append the recomputed slice

@@ -37,7 +37,7 @@ from pyspark.sql.types import ArrayType, LongType
 
 from ..config import DEFAULT, EngineConfig
 from ..functions import sketches as sk
-from .partitioning import spread_for_kernel
+from .partitioning import kernel_partitions
 
 
 # ------------------------------------------------------------- exact
@@ -93,7 +93,7 @@ def with_minhash(
     text_col: str = "text",
 ) -> DataFrame:
     # CPU-bound sketch: spread byte-sized scans to all cores first
-    docs = spread_for_kernel(docs)
+    docs = kernel_partitions(docs)
     return docs.select(
         F.col(id_col),
         _minhash_udf(cfg.minhash_perms, cfg.shingle_size)(F.col(text_col)).alias("minhash"),
@@ -134,7 +134,7 @@ def with_minhash_bands(
     identical values to ``with_minhash`` + ``_bands_udf`` (parity-
     tested); the LSH plans explode the stored ``bands`` column as pure
     JVM work instead of a second Python stage."""
-    docs = spread_for_kernel(docs)
+    docs = kernel_partitions(docs)
     fused = _minhash_sig_bands_udf(
         cfg.minhash_perms, cfg.shingle_size, cfg.minhash_bands
     )
@@ -186,24 +186,19 @@ def minhash_lsh_pairs(
     )
     a = banded.select(F.col("doc").alias("doc_a"), "band_idx", "band_hash")
     b = banded.select(F.col("doc").alias("doc_b"), "band_idx", "band_hash")
-    # the signature-equality verify downstream is CPU-bound PER PAIR
-    # (128-element zip/fold per row) while the candidate frame is two
-    # ids per row — AQE sizes post-shuffle partitions by BYTES and
-    # coalesces a 100k-pair frame to 1-2 partitions, serializing the
-    # verify on one core (round-6 profile: 0.56 s single-task stage at
-    # sf0.1). Explicit repartition to core count is the right sizing
-    # for a compute-bound stage at any scale. The repartition runs
-    # BEFORE the dedupe so the aggregate reuses its partitioning (one
-    # exchange, not two) AND so the exchange is user-specified — an
-    # ENSURE_REQUIREMENTS exchange here gets AQE-coalesced back to 1-2
-    # partitions, silently re-serializing the verify (round-8 profile:
-    # a 0.67 s single-task verify stage in the old plan).
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    pairs = (
+    # the signature-equality verify downstream is CPU-bound per pair
+    # while the candidate frame is two ids per row: AQE would coalesce
+    # its exchange by bytes to 1-2 partitions and run the verify on one
+    # core (round-6 profile: a 0.56 s single-task stage at sf0.1). The
+    # kernel exchange comes BEFORE the dedupe, so the aggregate reuses
+    # it: one exchange, not two.
+    cand = (
         a.join(b, ["band_idx", "band_hash"])
         .where(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
-        .repartition(par, "doc_a", "doc_b")
+    )
+    pairs = (
+        kernel_partitions(cand, "doc_a", "doc_b")
         .dropDuplicates(["doc_a", "doc_b"])
         .join(sigs.select(F.col(id_col).alias("doc_a"), F.col("minhash").alias("sig_a")), "doc_a")
         .join(sigs.select(F.col(id_col).alias("doc_b"), F.col("minhash").alias("sig_b")), "doc_b")
@@ -558,7 +553,7 @@ def with_simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     runs the numpy hash/vote kernels. Note: Python str.split() also
     splits on UNICODE whitespace — the engines agree on ASCII corpora
     (tested), and the JVM path is the contract-oracled one."""
-    docs = spread_for_kernel(docs)  # CPU-bound sketch stage
+    docs = kernel_partitions(docs)  # CPU-bound sketch stage
     toks = F.filter(
         F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"),
         lambda c: c != F.lit(""),
@@ -849,7 +844,7 @@ def ngram_jaccard_pairs(
     # are interpreted per element, not codegen'd). Semantics identical
     # to the SQL twin: lowercase, [^a-z0-9]+ -> space, distinct
     # space-joined word n-grams.
-    docs_g = spread_for_kernel(docs).select(
+    docs_g = kernel_partitions(docs).select(
         F.col(id_col).alias("doc"), _gram_udf(n)(F.col(text_col)).alias("grams")
     ).where(F.size("grams") > 0)
     # the gram table feeds four consumers (df counts, ranking, and both
@@ -892,20 +887,11 @@ def ngram_jaccard_pairs(
             & (F.least("na", "nb") >= F.lit(float(threshold)) * F.greatest("na", "nb"))
         )
         .select("doc_a", "doc_b")
-        # the exact verify below is CPU-bound per pair (array_intersect
-        # over ~hundreds of grams) while this frame is two ids per row;
-        # AQE coalesces it by BYTES to ~1 partition and serializes the
-        # verify — size the stage by cores instead (same round-6 fix as
-        # minhash_lsh_pairs). Repartition BEFORE the dedupe so the
-        # aggregate reuses the user-specified partitioning: one
-        # exchange, and one AQE cannot coalesce (round-8, mirrors the
-        # minhash_lsh_pairs fix).
-        .repartition(
-            docs.sparkSession.sparkContext.defaultParallelism,
-            "doc_a", "doc_b",
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
     )
+    # the exact verify below is CPU-bound per pair (array_intersect over
+    # ~hundreds of grams): same kernel exchange before the dedupe as in
+    # minhash_lsh_pairs
+    cand = kernel_partitions(cand, "doc_a", "doc_b").dropDuplicates(["doc_a", "doc_b"])
 
     # exact verification on candidates only
     ga = docs_g.select(

@@ -33,6 +33,7 @@ from ..functions import tags as tg
 from ..functions import varint
 from ..functions.earcut import earcut as _earcut
 from .assemble import assemble_relations, assemble_ways
+from .partitioning import kernel_partitions
 
 
 # ---------------------------------------------------------------- F1/F2
@@ -387,11 +388,8 @@ def node_features(nodes: DataFrame, spark: SparkSession) -> DataFrame:
     x = F.col("lon").cast("float")
     y = F.col("lat").cast("float")
     # the node branch feeds the encode kernel straight off the store
-    # scan — at small SF that is < cores partitions (bytes-based
-    # splits), which both under-parallelizes and skews the Python
-    # stage; no-op at scale (round-6: stage ran 25 tasks on 32 cores)
-    from .partitioning import spread_for_kernel
-    df = _kv_cols(spread_for_kernel(nodes)).withColumn(
+    # scan, which at small SF has fewer byte-sized splits than cores
+    df = _kv_cols(kernel_partitions(nodes)).withColumn(
         "_fe", _encode_point_udf("id", "lon", "lat", "_k", "_v", "_nm")
     )
     return (

@@ -60,9 +60,8 @@ struct. The codec layer:
 decoded tensor representation with correct Arrow batch semantics
 under ``mapInPandas``.
 
-Media rows are large: the operators repartition by byte-size budget
-(``bytes_per_partition``) before Python stages so Arrow batches stay
-bounded — the 100 TB consideration that matters here.
+Media rows are large; Arrow batches are bounded by record count
+(``spark.sql.execution.arrow.maxRecordsPerBatch`` in ``session.py``).
 """
 
 from __future__ import annotations
@@ -99,6 +98,7 @@ except ImportError:
 from ingest_spark.functions import gif as _gif
 from ingest_spark.functions import jpeg as _jpeg
 from ingest_spark.functions import webp as _webp
+from ingest_spark.operators.partitioning import kernel_partitions
 
 
 # --------------------------------------------------- pure-numpy codecs
@@ -641,16 +641,6 @@ def synthetic_media(spark: SparkSession, n: int = 100, seed: int = 42) -> DataFr
     )
 
 
-def repartition_by_bytes(
-    media: DataFrame, bytes_per_partition: int = 64 * 1024 * 1024
-) -> DataFrame:
-    """Size-aware repartition so Python/Arrow stages see bounded batches
-    even with multi-MB rows (total_bytes / budget partitions)."""
-    total = media.agg(F.sum("n_bytes")).first()[0] or 0
-    parts = max(1, int(total // bytes_per_partition) + 1)
-    return media.repartition(parts)
-
-
 def _fake_pixels(content: bytes, width: int, height: int) -> np.ndarray:
     """Deterministic pseudo-decode: bytes → (h, w, 3) float32 in [0,1]."""
     seed = int.from_bytes(content[:8].ljust(8, b"\0"), "little")
@@ -1073,8 +1063,7 @@ def synthetic_webp_media(spark: SparkSession, n: int = 96) -> DataFrame:
             out.append(data)
         return pd.Series(out)
 
-    from ingest_spark.operators.partitioning import spread_for_kernel
-    df = spread_for_kernel(df)
+    df = kernel_partitions(df)
     payload = _payload(i, width, height)
     return df.select(
         "media_id", F.lit("webp").alias("fmt"), width.alias("width"),
@@ -1183,8 +1172,7 @@ def synthetic_codec_audio(spark: SparkSession, n: int = 90) -> DataFrame:
             out.append(wav_encode(x, AUDIO_SAMPLE_RATE, codec=str(c)))
         return pd.Series(out)
 
-    from ingest_spark.operators.partitioning import spread_for_kernel
-    df = spread_for_kernel(df)
+    df = kernel_partitions(df)
     return df.select(
         "media_id", codec.alias("codec"),
         _payload(i, codec).alias("content"),
@@ -1272,8 +1260,7 @@ def synthetic_mjpeg_media(spark: SparkSession, n: int = 60) -> DataFrame:
                                   quality=90, subsample=m % 2 == 1))
         return pd.Series(out)
 
-    from ingest_spark.operators.partitioning import spread_for_kernel
-    df = spread_for_kernel(df)
+    df = kernel_partitions(df)
     return df.select("media_id", _payload(F.col("media_id")).alias("content"))
 
 
@@ -1339,8 +1326,7 @@ def synthetic_flac_audio(spark: SparkSession, n: int = 80) -> DataFrame:
             out.append(_flac.encode(x, AUDIO_SAMPLE_RATE))
         return pd.Series(out)
 
-    from ingest_spark.operators.partitioning import spread_for_kernel
-    df = spread_for_kernel(df)
+    df = kernel_partitions(df)
     return df.select("media_id", _payload(F.col("media_id")).alias("content"))
 
 

@@ -1,41 +1,61 @@
-"""Partition-shape helpers for CPU-bound (Arrow-kernel) stages.
+"""Partition shape for Python-kernel (pandas/Arrow UDF) stages.
 
-Spark sizes scan partitions by BYTES (`spark.sql.files.maxPartitionBytes`,
-128 MB default) — right for IO, wrong for Python-kernel stages: a small
-table (one parquet file under the split size) arrives as ONE partition
-and serializes the whole sketch/encode kernel on a single core while 31
-idle. At real scale the scan already yields ≥ cores partitions and these
-helpers are no-ops; at small SF they recover the lost parallelism.
+Spark sizes scan splits and AQE coalesces shuffle partitions by bytes:
+right for IO, wrong for a CPU-bound Python kernel, which a small input
+then runs on one core while the rest idle. ``kernel_partitions`` is the
+one place that sizes such a stage, from the plan alone, never running
+a job:
 
-(Round-5 measurement: the 5 000-doc sf0.1 documents table reads as one
-partition; the MinHash sketch stage drops 2.07 s → 0.31 s when spread
-to 32.)
+- with keys (a grouped kernel): hash-partition by the keys to the
+  default parallelism. The exchange is user-specified, so AQE does not
+  coalesce it, and the ``groupBy`` on the same keys reuses it;
+- a streaming input is left alone;
+- a plan without an exchange has a width the planner already knows
+  (file splits from the listing, an RDD's partitions); it is spread
+  round-robin only when under half the default parallelism, as the
+  spread is a full exchange that pays only for a large gain;
+- a plan with an exchange is adaptive, its width after coalescing known
+  only once it has run, so it is always spread.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+
+# other leaves whose partition count is fixed when the plan is built
+_PLANNED_LEAVES = {"RDDScanExec", "LocalTableScanExec", "RangeExec"}
 
 
-def spread_for_kernel(df: DataFrame, target: int | None = None) -> DataFrame:
-    """Round-robin repartition up to the session's default parallelism
-    when the input is SUBSTANTIALLY under-parallel; never shrinks,
-    never touches inputs that are already parallel (no extra shuffle
-    at scale).
+def _planned_splits(plan) -> int | None:
+    """Partitions the physical ``plan`` reads, summed over its leaves,
+    or None when only running part of it would tell."""
+    total = 0
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kind = leaf.getClass().getSimpleName()
+        if kind == "FileSourceScanExec":
+            n = leaf.inputRDD().getNumPartitions()
+        elif kind in _PLANNED_LEAVES:
+            n = leaf.execute().getNumPartitions()
+        elif kind == "InMemoryTableScanExec":  # as wide as the plan it caches
+            n = _planned_splits(leaf.relation().cachedPlan())
+        else:  # AdaptiveSparkPlanExec: its width is known once it has run
+            n = None
+        if n is None:
+            return None
+        total += n
+    return total
 
-    "Substantially" = under half the target (round 8): the repartition
-    is a full exchange of the input (plus the sort-before-repartition
-    pass), which only pays for itself when it unlocks a large
-    parallelism factor. A 23-partition scan on 32 cores gains ≤1.4×
-    compute overlap but paid a whole extra shuffle of the table
-    (measured ~0.5 s on the ingest node branch at sf0.1); a 1-partition
-    scan gains 32× and keeps the spread."""
+
+def kernel_partitions(df: DataFrame, *keys: str | Column) -> DataFrame:
+    """``df`` partitioned for a Python-kernel stage (module docstring)."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if keys:
+        return df.repartition(par, *keys)
     if df.isStreaming:
-        # streaming plans have no static partition count (and .rdd
-        # would throw); micro-batches inherit source parallelism
         return df
-    if target is None:
-        target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < max(2, target // 2):
-        return df.repartition(target)
+    splits = _planned_splits(df._jdf.queryExecution().executedPlan())
+    if splits is None or splits < max(2, par // 2):
+        return df.repartition(par)
     return df

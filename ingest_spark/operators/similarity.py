@@ -24,7 +24,7 @@ from pyspark.sql.types import ArrayType, LongType
 from pyspark.sql.window import Window
 
 from ..functions import sketches as sk
-from .partitioning import spread_for_kernel
+from .partitioning import kernel_partitions
 
 
 def _cosine(a, b):
@@ -58,7 +58,7 @@ def cosine_topk(
     # norms are computed once per vector BEFORE the join (each pair
     # then pays only the dot fold — 1/3 of the interpreted lambda work;
     # identical op order per vector ⇒ bit-identical cosine)
-    v = spread_for_kernel(vectors).select(
+    v = kernel_partitions(vectors).select(
         F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"),
         _norm(F.col(vec_col)).alias("_vn"),
     )
@@ -122,7 +122,7 @@ def ann_topk(
     test_webtext.py. Probe-code fan-out is a JVM-side XOR expression."""
     # norms once per vector, BEFORE the code explode/join (see
     # cosine_topk) — candidates pay only the dot fold
-    v = spread_for_kernel(vectors).select(
+    v = kernel_partitions(vectors).select(
         F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"),
         _norm(F.col(vec_col)).alias("_vn"),
         F.posexplode(_codes_udf(n_planes, n_tables)(F.col(vec_col))).alias("_tbl", "_code"),

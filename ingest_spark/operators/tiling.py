@@ -41,6 +41,7 @@ from pyspark.sql.types import (
 )
 
 from ..config import DEFAULT, EngineConfig
+from .partitioning import kernel_partitions
 
 # ------------------------------------------------------------ divide
 
@@ -309,14 +310,11 @@ def _divide_cells_in_pandas(
         pdf["bmaxy"] = bbox_cols[:, 3]
         return pdf
 
-    # user-pinned partitioning: the per-group divide is CPU-bound, and
-    # the groupBy's ENSURE_REQUIREMENTS exchange gets AQE-coalesced by
-    # BYTES to ~4 partitions, serializing the kernels (round-8 profile:
-    # 0.41 s / 4 tasks → ~0.15 s / 32). The explicit repartition on the
-    # same key is one exchange the aggregate reuses, at any scale.
-    par = with_cell.sparkSession.sparkContext.defaultParallelism
+    # the per-group divide is CPU-bound: the groupBy's own exchange gets
+    # AQE-coalesced by bytes and would serialize it (round-8 profile:
+    # 0.41 s / 4 tasks → ~0.15 s / 32)
     return (
-        with_cell.repartition(par, "grid_cell")
+        kernel_partitions(with_cell, "grid_cell")
         .groupBy("grid_cell")
         .applyInPandas(_divide_cell, out_schema)
     )
@@ -728,11 +726,8 @@ def _quadtree_distributed(
         pdf["_leaf"] = leaf_col
         return pdf
 
-    # user-pinned partitioning for the CPU-bound per-node divide (see
-    # _divide_cells_in_pandas — AQE would coalesce the group exchange)
-    par = big.sparkSession.sparkContext.defaultParallelism
     div_rows = (
-        div_in.repartition(par, "grid_cell", "_node")
+        kernel_partitions(div_in, "grid_cell", "_node")
         .groupBy("grid_cell", "_node")
         .applyInPandas(_divide_node, pb_schema)
     )
@@ -764,7 +759,7 @@ def _quadtree_distributed(
 
     narrow_div = div_in.select("grid_cell", "_node", "minx", "miny", "maxx", "maxy", "kind")
     pb_meta = (
-        narrow_div.repartition(par, "grid_cell", "_node")
+        kernel_partitions(narrow_div, "grid_cell", "_node")
         .groupBy("grid_cell", "_node")
         .applyInPandas(_divide_meta, meta_schema)
     )
@@ -938,11 +933,8 @@ def vector_tiles(features: DataFrame, z: int) -> DataFrame:
             }
         )
 
-    # user-pinned partitioning for the CPU-bound per-tile pack (see
-    # _divide_cells_in_pandas — AQE would coalesce the group exchange)
-    par = features.sparkSession.sparkContext.defaultParallelism
     return (
-        tiled.repartition(par, "tile_z", "tile_x", "tile_y")
+        kernel_partitions(tiled, "tile_z", "tile_x", "tile_y")
         .groupBy("tile_z", "tile_x", "tile_y")
         .applyInPandas(_pack, VECTOR_TILE_SCHEMA)
     )
@@ -994,10 +986,8 @@ def raster_tiles(features: DataFrame, z: int, px: int = 256) -> DataFrame:
             }
         )
 
-    # user-pinned partitioning (see _divide_cells_in_pandas)
-    par = features.sparkSession.sparkContext.defaultParallelism
     return (
-        tiled.repartition(par, "tile_z", "tile_x", "tile_y")
+        kernel_partitions(tiled, "tile_z", "tile_x", "tile_y")
         .groupBy("tile_z", "tile_x", "tile_y")
         .applyInPandas(_rasterize, RASTER_TILE_SCHEMA)
     )
@@ -1192,8 +1182,7 @@ def mvt_tiles(
     # than the fanned-out (geometry × tile) arrays (round-8 profile: a
     # single-file scan serialized the whole fan-out on 1 task and the
     # post-fan-out spread shuffled 28 MB of duplicated arrays)
-    from .partitioning import spread_for_kernel
-    geoms = spread_for_kernel(geoms)
+    geoms = kernel_partitions(geoms)
 
     has_holes = "hole_xs" in geoms.columns
     if not has_holes:
@@ -1318,11 +1307,8 @@ def mvt_tiles(
             "n_features": [len(pdf)], "payload": [buf.getvalue()],
         })
 
-    # user-pinned partitioning: AQE byte-based coalescing otherwise
-    # serializes the CPU-bound per-tile pack (see _divide_cells_in_pandas)
-    par = geoms.sparkSession.sparkContext.defaultParallelism
     return (
-        feats.repartition(par, "tile_x", "tile_y")
+        kernel_partitions(feats, "tile_x", "tile_y")
         .groupBy("tile_x", "tile_y")
         .applyInPandas(_pack, MVT_TILE_SCHEMA)
     )

@@ -43,6 +43,7 @@ from pyspark.sql.types import (
 )
 
 from ingest_spark.functions import htmltext as _htmltext
+from ingest_spark.operators.partitioning import kernel_partitions
 
 #: guards the session-wide AQE flip in `pagerank` (see its docstring)
 _AQE_LOCK = threading.RLock()
@@ -182,8 +183,7 @@ def synthetic_linked_pages(spark: SparkSession, n_pages: int = N_PAGES,
     def _url(pid: pd.Series) -> pd.Series:
         return pd.Series([_raw_url(int(i), n_hosts) for i in pid])
 
-    from ingest_spark.operators.partitioning import spread_for_kernel
-    df = spread_for_kernel(df)
+    df = kernel_partitions(df)
     return df.select(
         "page_id", _url(F.col("page_id")).alias("url"),
         _html(F.col("page_id")).alias("html"),

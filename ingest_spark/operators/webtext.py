@@ -19,10 +19,10 @@ webtext axis of this graft; `sources/pages.py` describes the pages
 table as the materialized form of exactly this input.
 
 Scale design: files parallelize across partitions (one task decodes
-many files; `repartition_by_bytes` bounds Arrow batches); per-record
-gzip members make single huge files splittable too (a CDX-style
-member-offset index is exactly what `parse` reports). No collect, no
-driver-side loops.
+many files; `spark.sql.execution.arrow.maxRecordsPerBatch` bounds
+Arrow batches); per-record gzip members make single huge files
+splittable too (a CDX-style member-offset index is exactly what
+`parse` reports). No collect, no driver-side loops.
 """
 
 from __future__ import annotations
@@ -40,6 +40,7 @@ from pyspark.sql.types import (
 from ingest_spark.functions import charset as _charset
 from ingest_spark.functions import htmltext as _htmltext
 from ingest_spark.functions import warc as _warc
+from ingest_spark.operators.partitioning import kernel_partitions
 
 # ------------------------------------------------- synthetic corpus
 
@@ -130,8 +131,7 @@ def synthetic_warc(spark: SparkSession, n_files: int = 12,
         return pd.Series(
             [build_warc_file(int(f), pages_per_file) for f in fi])
 
-    from ingest_spark.operators.partitioning import spread_for_kernel
-    df = spread_for_kernel(df)
+    df = kernel_partitions(df)
     return df.select(
         "file_idx",
         F.format_string("warc-%05d", F.col("file_idx")).alias("warc_file"),
@@ -370,8 +370,7 @@ def synthetic_charset_warc(spark: SparkSession, n_files: int = 8,
         return pd.Series(
             [build_charset_warc_file(int(f), pages_per_file) for f in fi])
 
-    from ingest_spark.operators.partitioning import spread_for_kernel
-    df = spread_for_kernel(df)
+    df = kernel_partitions(df)
     return df.select(
         "file_idx",
         F.format_string("wcs-%05d", F.col("file_idx")).alias("warc_file"),
@@ -427,8 +426,7 @@ def synthetic_geotagged_pages(spark: SparkSession,
             )
         return pd.Series(out)
 
-    from ingest_spark.operators.partitioning import spread_for_kernel
-    df = spread_for_kernel(df)
+    df = kernel_partitions(df)
     return df.select("page_id", _html(F.col("page_id")).alias("html"))
 
 
@@ -523,8 +521,7 @@ def synthetic_boilerplate_pages(spark: SparkSession,
     def _html(pid: pd.Series) -> pd.Series:
         return pd.Series([boilerplate_page_html(int(p)) for p in pid])
 
-    from ingest_spark.operators.partitioning import spread_for_kernel
-    return spread_for_kernel(df).select(
+    return kernel_partitions(df).select(
         "page_id", _html(F.col("page_id")).alias("html"))
 
 
@@ -604,8 +601,7 @@ def synthetic_wet(spark: SparkSession, n_files: int = 12,
         return pd.Series(
             [build_wet_file(int(f), pages_per_file) for f in fi])
 
-    from ingest_spark.operators.partitioning import spread_for_kernel
-    df = spread_for_kernel(df)
+    df = kernel_partitions(df)
     return df.select(
         "file_idx",
         F.format_string("wet-%05d", F.col("file_idx")).alias("warc_file"),

@@ -8,8 +8,8 @@ pandas/Arrow-vectorized), bloom-filter runtime join pruning (the
 semi-join reduction the reference hand-rolls in src/denorm.rs:387-389).
 
 Parallelism comes from ``SPARK_GRAFT_MASTER`` / ``SPARK_GRAFT_CPUS``
-so the same code runs the two-parallelism scaling protocol
-(local[8] vs local[32]) without edits.
+so the same code runs at any core count without edits; with neither
+set it is the cores this process may run on.
 """
 
 from __future__ import annotations
@@ -33,6 +33,15 @@ def driver_memory(meminfo: str) -> str:
     return f"{DRIVER_MEM_CAP_MB}m"
 
 
+def default_parallelism(master: str, cpus: int) -> int:
+    """Shuffle partitions and default parallelism for ``master`` on a
+    host with ``cpus`` usable cores: the cores of ``local[N]``, else the
+    host's, and at least 8. At cluster scale pass ``shuffle_partitions``
+    (~2-3× total cores) or leave it to AQE coalescing."""
+    n = master[master.find("[") + 1 : master.find("]")].split(",")[0] if "[" in master else "*"
+    return max(8, cpus if n == "*" else int(n))
+
+
 def _default_driver_memory() -> str:
     try:
         with open("/proc/meminfo") as f:
@@ -49,15 +58,12 @@ def get_spark(
 ) -> SparkSession:
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER")
+    # cores this process may use (sched_getaffinity is Linux-only)
+    cpus = len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count()
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS') or cpus}]"
     if shuffle_partitions is None:
-        # ≥ cores so every thread has work; small enough that sf0.1
-        # partitions stay cache-sized. At cluster scale this is set to
-        # ~2-3× total cores or left to AQE coalescing.
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
-        shuffle_partitions = 32 if n == "*" else max(8, int(n))
+        shuffle_partitions = default_parallelism(master, cpus)
 
     # make the package importable in executor Python workers regardless of
     # the driver's cwd: local mode inherits PYTHONPATH; on a real cluster

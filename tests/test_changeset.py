@@ -15,6 +15,8 @@ from ingest_spark.functions import tags as tg
 from ingest_spark.operators import extract
 from ingest_spark.operators.changeset import Changeset, apply_changeset
 from ingest_spark.operators.features import build_features
+from ingest_spark.operators.spatial import with_cells
+from ingest_spark.plans.pipeline import run_ingest
 from ingest_spark.sources import pages as pages_src
 
 
@@ -110,6 +112,46 @@ class TestChangeset:
         d = gr.decode(bytes(after[9000].encoded))
         assert d["feature_type"] == tg.get_type("amenity.pub")
         assert d["labels"] == gr.pack_labels("new pub")
+
+
+def _digest(df):
+    return sorted(
+        (r.id, bytes(r.encoded), r.hex_cell, r.s2_cell)
+        for r in df.select("id", "encoded", "hex_cell", "s2_cell").collect()
+    )
+
+
+class TestIngestTable:
+    def test_changeset_on_cell_indexed_table_equals_rebuild(self, spark, tmp_path):
+        """The table ``run_ingest`` writes carries hex_cell/s2_cell: the
+        recomputed slice gets the same cells a full rebuild would."""
+        pages = pages_src.fixture_pages(spark)
+        feats = run_ingest(spark, pages, str(tmp_path), optimize_grid=None).features
+        assert {"hex_cell", "s2_cell"} <= set(feats.columns)
+        nodes, ways, rels = extract.parse_elements(pages)
+        cs = Changeset(
+            # node 2000 moves and is retagged (tests/ingest.rs:141-146)
+            nodes_upsert=spark.createDataFrame(
+                [(2000, 13.04, 37.04, {"highway": "bus_stop"})],
+                "id long, lon double, lat double, tags map<string,string>",
+            ),
+            way_deletes=[555],
+            # relation 700 loses its inner ring 601
+            relations_upsert=spark.createDataFrame(
+                [(700, [(600, "outer", "way")],
+                  {"type": "multipolygon", "natural": "water", "name": "cool lake"})],
+                "id long, members array<struct<ref:long,role:string,mtype:string>>, "
+                "tags map<string,string>",
+            ),
+        )
+        merged, n2, w2, r2 = apply_changeset(spark, feats, nodes, ways, rels, cs)
+        assert merged.columns == feats.columns
+        rebuilt = with_cells(build_features(n2, w2, r2, spark))
+        got = _digest(merged)
+        assert got == _digest(rebuilt)
+        ids = {row[0] for row in got}
+        assert 555 * 3 + 1 not in ids and 2000 * 3 in ids and 700 * 3 + 2 in ids
+        assert got != _digest(feats)
 
 
 class TestMegaClosure:

@@ -4,7 +4,7 @@ import os
 
 import pytest
 
-from ingest_spark.session import driver_memory
+from ingest_spark.session import default_parallelism, driver_memory
 
 MEMINFO_15G = """MemTotal:       15995440 kB
 MemFree:        14313108 kB
@@ -22,6 +22,20 @@ def test_driver_memory_capped_at_24g():
 
 def test_driver_memory_without_memtotal_keeps_the_cap():
     assert driver_memory("MemFree:        1024 kB\n") == "24576m"
+
+
+@pytest.mark.parametrize("master,cpus,expected", [
+    ("local[*]", 4, 8),          # was 32 whatever the host
+    ("local[*]", 48, 48),
+    ("local", 4, 8),
+    ("local[16]", 4, 16),        # an explicit thread count wins
+    ("local[2]", 64, 8),
+    ("local[12,3]", 4, 12),      # local[N,maxFailures]
+    ("spark://head:7077", 6, 8),
+    ("spark://head:7077", 24, 24),
+])
+def test_default_parallelism_fits_the_host(master, cpus, expected):
+    assert default_parallelism(master, cpus) == expected
 
 
 @pytest.mark.skipif("SPARK_GRAFT_LOCAL_DIR" in os.environ, reason="spill dir chosen by the caller")

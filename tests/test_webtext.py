@@ -687,12 +687,6 @@ class TestMultimodal:
         )
         assert bad.count() == 0
 
-    def test_repartition_by_bytes(self, spark):
-        media = multimodal.synthetic_media(spark, 100)
-        out = multimodal.repartition_by_bytes(media, bytes_per_partition=2000)
-        assert out.rdd.getNumPartitions() >= 4
-        assert out.count() == 100
-
 
 class TestNgramPrefixFilterProperty:
     @pytest.mark.parametrize("seed,t", [(1, 0.3), (2, 0.5), (3, 0.7), (4, 0.9)])
