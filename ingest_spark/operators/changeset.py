@@ -23,7 +23,8 @@ Spark-first shape — an Iceberg ``MERGE INTO`` keyed on feature id:
 4. merge: old features ∖ affected ∪ recomputed. On a table that
    carries cell columns (the ingest table ``run_ingest`` writes), the
    recomputed slice gets them from ``with_cells`` with the same
-   ``EngineConfig``.
+   ``EngineConfig``, behind the rebalance ``build_features`` ends in
+   (``features.rebalance_encoded``).
 
 Join sizing: the closure id frames are usually tiny next to the element
 tables, so AQE picks broadcast sides at runtime; no broadcast() hints
@@ -116,7 +117,7 @@ def apply_changeset(
     changed_rels = changed_rels_direct.unionByName(rels_via_ways).distinct()
 
     # ---- recompute the affected slice only (semi-join pruning)
-    from .features import node_features, relation_features, way_features
+    from .features import node_features, rebalance_encoded, relation_features, way_features
     from .spatial import with_cells
 
     recomputed = node_features(nodes2.join(changed_nodes, "id", "left_semi"), spark)
@@ -129,7 +130,7 @@ def apply_changeset(
         relation_features(rels2.join(changed_rels, "id", "left_semi"), ways2, nodes2, spark)
     )
     if "hex_cell" in features.columns:
-        recomputed = with_cells(recomputed, cfg)
+        recomputed = with_cells(rebalance_encoded(recomputed), cfg)
 
     # MERGE: drop every affected feature id (deleted ones stay dropped),
     # append the recomputed slice

@@ -501,4 +501,19 @@ def build_features(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out
+    return rebalance_encoded(out)
+
+
+def rebalance_encoded(features: DataFrame) -> DataFrame:
+    """Encoded features behind an AQE rebalance exchange.
+
+    Without the exchange, Catalyst pushes a downstream projection
+    (``with_cells``) through the feature union into every branch, and
+    each branch task then chains two Python evaluation nodes, encode
+    then cells: two Python workers per task slot. The rebalance ends
+    the encode stages, so the cells kernel runs once over the union in
+    a stage of its own. AQE sizes its partitions from the encoded bytes
+    (``RebalancePartitions``: coalesces small ones, splits skewed
+    ones), which also sizes the files of a table written from it. The
+    rows are not sorted."""
+    return features.hint("rebalance")

@@ -10,9 +10,11 @@ tests/ingest.rs:29-34) — to the north_rule's operator set. Design:
   feature centroid; one cell per feature (no multi-assign → no dedup
   problem; cf. the reference's J9 skip-map workaround for duplicates,
   src/lib.rs:469-515).
-- bbox query: pure column predicate (maxx>=x0 AND minx<=x1 AND …) —
-  with the features table written partitioned/sorted by cell, parquet
-  min-max stats + partition pruning give the eyros-tree behavior.
+- bbox query: pure column predicate (maxx>=x0 AND minx<=x1 AND …),
+  pushed into the parquet scan. Its min-max stats prune row groups
+  only on a table clustered by position; the ingest table is
+  rebalanced, not sorted (features.rebalance_encoded), so a query on it
+  reads most row groups.
 - PIP: broadcast the (small) polygon table, bbox-prefilter with a
   cheap non-equi condition (BroadcastNestedLoopJoin), then exact
   even-odd ray casting in a vectorized numpy kernel. At 100 TB the
@@ -613,9 +615,11 @@ def bbox_query_indexed(
     cell_col: str = "hex_cell",
 ) -> DataFrame:
     """Index-assisted bbox query: prefilter by the hex-cell covering set
-    (an IN-list Catalyst pushes into the parquet scan — on a table
-    written sorted by cell this prunes row groups like an eyros tree
-    descent), then apply the exact interval predicate (S11).
+    (an IN-list Catalyst pushes into the parquet scan), then apply the
+    exact interval predicate (S11). The IN-list prunes row groups, like
+    an eyros tree descent, only on a table clustered by ``cell_col``
+    (sorted or range-partitioned on it). The ingest table is
+    rebalanced and unsorted, so there it acts as a row filter.
 
     Falls back to the plain predicate when the covering set is too big
     for a useful IN-list (large boxes scan most of the table anyway).
@@ -723,8 +727,12 @@ def knn_join_h3(
             per[int(uniq[i])].append(c2)
         return pd.Series([per[int(c)] for c in cell])
 
+    # explode_outer, not explode: for an inner generator Catalyst infers
+    # a size(_cells) > 0 filter, which, once the projections collapse,
+    # calls the UDF a second time in a second Python node. The null row
+    # explode_outer keeps for an empty list drops at the inner join.
     exp1 = qs.withColumn("_cells", _disk("_qcell")).select(
-        "_qid", "_qx", "_qy", F.explode("_cells").alias("_pcell")
+        "_qid", "_qx", "_qy", F.explode_outer("_cells").alias("_pcell")
     )
     topk1 = _topk(exp1.join(pts, "_pcell", "inner")).localCheckpoint(eager=True)
     stat1 = topk1.groupBy("_qid").agg(
@@ -770,7 +778,7 @@ def knn_join_h3(
     if n_p2 > 0:
         p2 = st.where(is_pass2).withColumn(
             "_cells", _cover("_qx", "_qy", "_kth1")
-        ).select("_qid", "_qx", "_qy", F.explode("_cells").alias("_pcell"))
+        ).select("_qid", "_qx", "_qy", F.explode_outer("_cells").alias("_pcell"))
         parts.append(
             _topk(p2.join(pts, "_pcell", "inner")).select(
                 "_qid", "_pid", "dist", "rank",

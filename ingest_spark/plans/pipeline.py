@@ -3,7 +3,7 @@
 
   stage scan     → element stats table (ScanTable analog, S1-S3)
   stage ingest   → features (assemble + classify + encode + cells),
-                   written sorted by (hex_cell, id)
+                   written as AQE rebalanced them, unsorted
   stage optimize → quadtree buckets + hot-cell salting + tile ids
                    (the --optimize re-partition pass, O1-O4)
 
