@@ -10,16 +10,15 @@ scheme (s2geometry.io; quadratic ST projection, Hilbert curve via
 bits + trailing 1). Implemented from the published algorithm — no S2
 library is available in this environment.
 
-**Hex cells**: the public encoder (``hex_cell``/``h3_cell``) emits
-H3-spec-derived ids (parity-gated against the published H3 spec; see h3core.py scope note) by default — the full icosahedral algorithm implemented
-from the published spec in pure numpy (functions/h3core.py; no `h3`
-wheel needed; gated library arbitration kept via SPARK_GRAFT_USE_H3).
-A deterministic PLANAR axial grid (``hex_cell_id``; aperture-7 edge
-scaling matched to H3's res-8 mean edge ≈ 461 m) remains first-class
-as the RING-MATH grid: kNN k_ring expansion and bbox covers key on it
-explicitly (its planar geometry is what the ring-distance guarantee is
-proven on), and ``SPARK_GRAFT_PLANAR_HEX=1`` routes the public
-encoder to it as a fallback.
+**Hex cells**: the public encoder (``hex_cell``) emits H3-spec-derived
+ids (parity-gated against the published H3 spec; see h3core.py
+scope note): the full icosahedral algorithm implemented from the
+published spec in pure numpy (functions/h3core.py; no `h3` wheel
+needed). A deterministic PLANAR axial grid (``hex_cell_id``;
+aperture-7 edge scaling matched to H3's res-8 mean edge ≈ 461 m) is
+internal only: it is the RING-MATH grid for kNN k_ring expansion and
+the PIP grid join's cover (its planar geometry is what the
+ring-distance guarantee is proven on). No public id comes from it.
 
 Reference parity: cell assignment generalizes the reference's
 grid-bucket assignment (src/lib.rs:427-444 grid, src/divide.rs:43-52
@@ -29,7 +28,6 @@ max-overlap); the quadtree itself lives in operators/tiling.py.
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 
@@ -173,6 +171,10 @@ def s2_parent(cell_id, level: int) -> np.ndarray:
 
 
 # ------------------------------------------------------------ hex grid
+#
+# The PLANAR axial grid: internal only. knn_join's ring math
+# (hex_k_ring) and point_in_polygon_grid_join's cover (hex_cover_bbox)
+# key on it; no public cell id comes from it (that is hex_cell, H3).
 
 # aperture-7 scaling calibrated to H3: res-8 mean hex edge ≈ 461.354 m
 # ≈ 0.0041444° at the equator ⇒ edge(res) = _EDGE0_DEG / √7^res
@@ -266,66 +268,31 @@ def hex_ring(cell_id: int, k: int) -> list[int]:
 
 
 def hex_k_ring(cell_id: int, k: int) -> list[int]:
-    """All cells within ``k`` rings (1 + 3k(k+1) cells)."""
+    """All planar cells within ``k`` rings (1 + 3k(k+1) cells): the
+    reference set for knn_join's Catalyst k_ring expansion."""
     out = []
     for ring in range(k + 1):
         out.extend(hex_ring(cell_id, ring))
     return out
 
 
-# --------------------------------------------------- real H3 (default)
+# ------------------------------------------------------------- real H3
 
 from . import h3core as _h3core  # noqa: E402  (real H3 in pure numpy)
 
-_USE_PLANAR_HEX = os.environ.get("SPARK_GRAFT_PLANAR_HEX") == "1"
-_USE_REAL_H3 = os.environ.get("SPARK_GRAFT_USE_H3") == "1"
-try:  # pragma: no cover - not installed in this environment
-    import h3 as _h3  # type: ignore
 
-    _HAVE_H3 = True
-except ImportError:
-    _h3 = None
-    _HAVE_H3 = False
-
-
-def use_real_h3() -> bool:
-    """True unless the planar fallback flag is set: the interop cell
-    surface (``hex_cell`` / with_cells) emits H3-spec-derived ids (parity-gated against the published H3 spec; see h3core.py scope note) by default
-    since round 4 (functions/h3core.py, pure numpy — no library
-    needed). Callers with a JVM-expression twin of the PLANAR grid must
-    use the Python kernel whenever this is True."""
-    return not _USE_PLANAR_HEX
-
-
-def h3_cell(lon, lat, res: int = 8) -> np.ndarray:
-    """Real H3 cell ids (int64). Default: the in-repo pure-numpy
-    implementation (h3core.latlng_to_cell — validated against embedded
-    public vectors). With SPARK_GRAFT_USE_H3=1 and the `h3` wheel
-    importable, routes through the library instead (the original
-    parity gate, kept so the wheel can arbitrate if ever present)."""
+def hex_cell(lon, lat, res: int = 8) -> np.ndarray:
+    """Public hex encoder: H3-spec-derived res-`res` ids (int64) from
+    the in-repo pure-numpy implementation (h3core.latlng_to_cell —
+    validated against embedded public vectors)."""
     lon = np.asarray(lon, dtype=np.float64)
     lat = np.asarray(lat, dtype=np.float64)
-    if _USE_REAL_H3 and _HAVE_H3:  # pragma: no cover - wheel absent here
-        return np.asarray(
-            [_h3.str_to_int(_h3.latlng_to_cell(la, lo, res)) for lo, la in zip(lon, lat)],
-            dtype=np.int64,
-        )
     return _h3core.latlng_to_cell(lon, lat, res)
 
 
-def hex_cell(lon, lat, res: int = 8) -> np.ndarray:
-    """Public hex encoder — H3-spec-derived res-`res` ids by default (parity-gated; h3core.py scope note); the
-    planar builtin grid only with SPARK_GRAFT_PLANAR_HEX=1 (the grid
-    itself stays first-class for ring math: kNN k_ring expansion and
-    bbox covers key on it explicitly via hex_cell_id)."""
-    if _USE_PLANAR_HEX:
-        return hex_cell_id(lon, lat, res)
-    return h3_cell(lon, lat, res)
-
-
 def hex_cover_size(x0: float, y0: float, x1: float, y1: float, res: int = 8) -> int:
-    """Upper-bound count of hex_cover_bbox without enumerating —
-    callers use it to fall back to a plain scan for huge boxes."""
+    """Upper-bound count of hex_cover_bbox without enumerating — the
+    PIP grid join coarsens ``res`` until its largest polygon fits."""
     size = hex_edge_deg(res)
     pad = 2.0 * size
     rows = int(math.ceil((y1 - y0 + 2 * pad) * 2.0 / 3.0 / size)) + 2
@@ -334,11 +301,10 @@ def hex_cover_size(x0: float, y0: float, x1: float, y1: float, res: int = 8) -> 
 
 
 def hex_cover_bbox(x0: float, y0: float, x1: float, y1: float, res: int = 8) -> list[int]:
-    """All hex cells whose center could own a point in the bbox —
-    the covering set for an indexed bbox read (eyros tree-descent
-    analog: turns a spatial predicate into a cell-id IN-list that
-    prunes a (cell-sorted) table's row groups). Padded by one cell so
-    boundary points binned to a neighboring center are included."""
+    """All planar cells whose center could own a point in the bbox —
+    a polygon's join keys in point_in_polygon_grid_join. Padded by one
+    cell so boundary points binned to a neighboring center are
+    included."""
     size = hex_edge_deg(res)
     pad = 2.0 * size
     qs, rs = [], []
@@ -382,14 +348,13 @@ def h3_cover_bbox(x0: float, y0: float, x1: float, y1: float, res: int = 8) -> l
     lats = np.arange(max(y0 - pad, -90.0), min(y1 + pad, 90.0) + step, step)
     lons = np.arange(x0 - pad, x1 + pad + step, step)
     glon, glat = np.meshgrid(lons, lats)
-    ids = h3_cell(glon.ravel(), np.clip(glat.ravel(), -90.0, 90.0), res)
+    ids = hex_cell(glon.ravel(), np.clip(glat.ravel(), -90.0, 90.0), res)
     return np.unique(ids).tolist()
 
 
 def h3_cover_size(x0: float, y0: float, x1: float, y1: float, res: int = 8) -> int:
     """Upper-bound PROBE count of h3_cover_bbox without running it —
-    callers fall back to a plain scan for huge boxes (same contract as
-    hex_cover_size)."""
+    bbox_query_indexed falls back to a plain scan for huge boxes."""
     edge = _h3core.h3_edge_deg(res)
     step = 0.55 * edge  # keep in sync with h3_cover_bbox's step
     rows = int(math.ceil((min(y1, 90.0) - max(y0, -90.0) + 5 * edge) / step)) + 2

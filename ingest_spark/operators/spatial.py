@@ -62,8 +62,9 @@ def hex_cell_col(lon, lat, res: int):
     in the hot path). Bit-exact vs the numpy kernel: identical IEEE op
     order, and Math.rint == np.rint (both round-half-even); no
     transcendentals involved (property-tested equal in test_cells.py).
-    Used whenever the real-H3 gate is off (real H3 needs the library,
-    which only exists Python-side)."""
+    The planar grid is an internal join key only: knn_join's ring math
+    and point_in_polygon_grid_join's cover key on it; no public cell id
+    (``hex_cell``) comes from it."""
     import math as _m
 
     size = F.lit(cell_fn.hex_edge_deg(res))
@@ -83,24 +84,6 @@ def hex_cell_col(lon, lat, res: int):
         .bitwiseOR(F.shiftleft(q + off, 28))
         .bitwiseOR(r + off)
     )
-
-
-def _hex_col(lon, lat, res: int):
-    """Interop hex cell column: H3-spec-derived ids (parity-gated against the published H3 spec; see h3core.py scope note) by default since round 4
-    (Arrow-batched pandas UDF over functions/h3core.py); the planar
-    Catalyst expression only under SPARK_GRAFT_PLANAR_HEX=1. Ring-math
-    consumers (kNN, covers) do NOT use this — they pin hex_cell_col
-    (the planar grid) explicitly."""
-    if cell_fn.use_real_h3():
-        return _hex_udf(res)(lon, lat)
-    return hex_cell_col(lon, lat, res)
-
-
-def _s2_udf(level: int):
-    @F.pandas_udf(LongType())
-    def _u(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(cell_fn.s2_cell_id(lon.to_numpy(), lat.to_numpy(), level))
-    return _u
 
 
 def _hex_s2_udf(res: int, level: int):
@@ -147,21 +130,14 @@ def with_cells(
     # single projection: inline the anchor expressions into both cell
     # kernels instead of a 4-deep withColumn chain (each link costs a
     # full Catalyst re-analysis — measurable at small SF where the
-    # pipeline is planning-bound)
-    if cell_fn.use_real_h3():
-        # default path: ONE fused pandas UDF for both kernels (one
-        # Python stage instead of two — round-8 guide §4 fix)
-        st = _hex_s2_udf(cfg.hex_res, cfg.s2_level)(lon, lat)
-        cols = features.columns
-        return features.withColumn("_hs", st).select(
-            *cols,
-            F.col("_hs.hex_cell").alias("hex_cell"),
-            F.col("_hs.s2_cell").alias("s2_cell"),
-        )
-    return features.withColumns({
-        "hex_cell": _hex_col(lon, lat, cfg.hex_res),
-        "s2_cell": _s2_udf(cfg.s2_level)(lon, lat),
-    })
+    # pipeline is planning-bound); ONE fused pandas UDF for both kernels
+    st = _hex_s2_udf(cfg.hex_res, cfg.s2_level)(lon, lat)
+    cols = features.columns
+    return features.withColumn("_hs", st).select(
+        *cols,
+        F.col("_hs.hex_cell").alias("hex_cell"),
+        F.col("_hs.s2_cell").alias("s2_cell"),
+    )
 
 
 # ----------------------------------------------------------- S11 query
@@ -274,13 +250,16 @@ def point_in_polygon_join(
     raise ValueError(f"unsupported join type: {how}")
 
 
+# largest cover (cells) one polygon bbox may explode to in the grid join
+_PIP_MAX_COVER = 50_000
+
+
 def point_in_polygon_grid_join(
     points: DataFrame,
     polygons: DataFrame,
     res: int = 4,
     point_x: str = "lon",
     point_y: str = "lat",
-    max_cover: int = 50_000,
 ) -> DataFrame:
     """Big-big PIP join — the NON-broadcast scale path for when the
     polygon table itself is too large for a broadcast hash table:
@@ -295,12 +274,11 @@ def point_in_polygon_grid_join(
     single-assigned to one cell, so no dedup is needed; equality is
     pytest-asserted).
 
-    Both sides use the BUILTIN grid unconditionally (hex_cover_bbox has
-    no real-H3 analog, so mixing _hex_col's gated ids with builtin
-    covers would silently join nothing under SPARK_GRAFT_USE_H3=1 —
-    the cell here is an internal join key, not a user-facing index).
+    Both sides key on the internal PLANAR grid (hex_cell_col points,
+    hex_cover_bbox covers): the cell here is a join key, not the public
+    H3 index, and the two sides must share one id space.
     ``res`` auto-coarsens until the LARGEST polygon bbox covers at most
-    ``max_cover`` cells (one tiny driver agg): a continent-sized
+    ``_PIP_MAX_COVER`` cells (one tiny driver agg): a continent-sized
     polygon must not explode to millions of cover rows; the result is
     resolution-independent, only candidate density changes."""
     ext = polygons.agg(
@@ -309,7 +287,7 @@ def point_in_polygon_grid_join(
     ).first()
     dx = float(ext["dx"] or 0.0)
     dy = float(ext["dy"] or 0.0)
-    while res > 0 and cell_fn.hex_cover_size(0.0, 0.0, dx, dy, res) > max_cover:
+    while res > 0 and cell_fn.hex_cover_size(0.0, 0.0, dx, dy, res) > _PIP_MAX_COVER:
         res -= 1
 
     @F.pandas_udf(ArrayType(LongType()))
@@ -365,6 +343,48 @@ def make_polygons_df(spark, polys: list[dict]) -> DataFrame:
 
 # ------------------------------------------------------------------ kNN
 
+# knn_join_h3: the pass-1 disk radius, and the largest pass-2 cover
+# (cells) before a query falls back to the brute-force pass
+_KNN_H3_SEED_RING = 1
+_KNN_H3_MAX_COVER = 20_000
+
+
+def _knn_points(points: DataFrame, point_id: str) -> DataFrame:
+    """The point side every kNN plan reads: (_pid, _px, _py)."""
+    return points.select(
+        F.col(point_id).alias("_pid"),
+        F.col("lon").cast("double").alias("_px"),
+        F.col("lat").cast("double").alias("_py"),
+    )
+
+
+def _knn_queries(queries: DataFrame, query_id: str) -> DataFrame:
+    """The query side every kNN plan reads: (_qid, _qx, _qy)."""
+    return queries.select(
+        F.col(query_id).alias("_qid"),
+        F.col("lon").cast("double").alias("_qx"),
+        F.col("lat").cast("double").alias("_qy"),
+    )
+
+
+def _topk(cand: DataFrame, k: int) -> DataFrame:
+    """Each query's k nearest candidates, ranked 1..k by (dist, _pid)."""
+    d2 = (F.col("_px") - F.col("_qx")) ** 2 + (F.col("_py") - F.col("_qy")) ** 2
+    w = Window.partitionBy("_qid").orderBy(F.sqrt(d2).asc(), F.col("_pid").asc())
+    return (
+        cand.withColumn("dist", F.sqrt(d2))
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+    )
+
+
+def _knn_result(result: DataFrame, query_id: str, point_id: str) -> DataFrame:
+    """The public kNN schema: (qid, id, dist, rank)."""
+    return result.select(
+        F.col("_qid").alias(query_id), F.col("_pid").alias(point_id), "dist", "rank"
+    )
+
+
 def knn_join(
     points: DataFrame,
     queries: DataFrame,
@@ -401,11 +421,7 @@ def knn_join(
     # the loop's lifetime (MEMORY_AND_DISK default: spills, never OOMs)
     # so the cell-assignment UDF and upstream scan run exactly once;
     # released with the round caches before returning.
-    pts = points.select(
-        F.col(point_id).alias("_pid"),
-        F.col("lon").cast("double").alias("_px"),
-        F.col("lat").cast("double").alias("_py"),
-    ).withColumn(
+    pts = _knn_points(points, point_id).withColumn(
         # BUILTIN planar grid unconditionally: the ring-expansion
         # geometry (hex_k_ring + the edge-distance guarantee) is a
         # property of this grid; the cell is an internal join key,
@@ -413,22 +429,9 @@ def knn_join(
         "_pcell", hex_cell_col(F.col("_px"), F.col("_py"), res)
     ).persist()
 
-    qs = queries.select(
-        F.col(query_id).alias("_qid"),
-        F.col("lon").cast("double").alias("_qx"),
-        F.col("lat").cast("double").alias("_qy"),
-    ).withColumn("_qcell", hex_cell_col(F.col("_qx"), F.col("_qy"), res))
-
-    def _topk(cand: DataFrame) -> DataFrame:
-        d2 = (F.col("_px") - F.col("_qx")) ** 2 + (F.col("_py") - F.col("_qy")) ** 2
-        w = F.row_number().over(
-            Window.partitionBy("_qid").orderBy(F.sqrt(d2).asc(), F.col("_pid").asc())
-        )
-        return (
-            cand.withColumn("dist", F.sqrt(d2))
-            .withColumn("rank", w)
-            .where(F.col("rank") <= k)
-        )
+    qs = _knn_queries(queries, query_id).withColumn(
+        "_qcell", hex_cell_col(F.col("_qx"), F.col("_qy"), res)
+    )
 
     # Per-query ring seed from the query cell's own point count: the
     # goal is resolving in ONE round (every driver round is a full job),
@@ -504,7 +507,7 @@ def knn_join(
                 ).alias("_pcell"),
             )
         )
-        return _topk(exp.join(pts, "_pcell", "inner"))
+        return _topk(exp.join(pts, "_pcell", "inner"), k)
 
     topk1 = _probe(remaining).cache()
     stat1 = topk1.groupBy("_qid").agg(
@@ -555,17 +558,12 @@ def knn_join(
         parts.append(_probe(pass2_q).select("_qid", "_pid", "dist", "rank"))
     if n_br > 0:
         brute_q = st.where(is_brute).select("_qid", "_qx", "_qy")
-        parts.append(_topk(brute_q.crossJoin(pts)).select("_qid", "_pid", "dist", "rank"))
+        parts.append(_topk(brute_q.crossJoin(pts), k).select("_qid", "_pid", "dist", "rank"))
 
     result = parts[0]
     for p in parts[1:]:
         result = result.unionByName(p)
-    out = result.select(
-        F.col("_qid").alias(query_id),
-        F.col("_pid").alias(point_id),
-        "dist",
-        "rank",
-    )
+    out = _knn_result(result, query_id, point_id)
     # materialize once (truncating lineage), then release the caches:
     # consumers read the checkpointed blocks, never the unpersisted plan
     out = out.localCheckpoint(eager=True)
@@ -585,27 +583,9 @@ def knn_brute_force(
     """Reference/baseline kNN: broadcast cross join + window top-k.
     The oracle twin of knn_join (and the right plan when queries are
     few and points fit the broadcast threshold)."""
-    pts = points.select(
-        F.col(point_id).alias("_pid"),
-        F.col("lon").cast("double").alias("_px"),
-        F.col("lat").cast("double").alias("_py"),
-    )
-    qs = queries.select(
-        F.col(query_id).alias("_qid"),
-        F.col("lon").cast("double").alias("_qx"),
-        F.col("lat").cast("double").alias("_qy"),
-    )
-    d2 = (F.col("_px") - F.col("_qx")) ** 2 + (F.col("_py") - F.col("_qy")) ** 2
-    w = Window.partitionBy("_qid").orderBy(F.sqrt(d2).asc(), F.col("_pid").asc())
-    return (
-        qs.crossJoin(pts)
-        .withColumn("dist", F.sqrt(d2))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("_qid").alias(query_id), F.col("_pid").alias(point_id), "dist", "rank"
-        )
-    )
+    pts = _knn_points(points, point_id)
+    qs = _knn_queries(queries, query_id)
+    return _knn_result(_topk(qs.crossJoin(pts), k), query_id, point_id)
 
 
 def bbox_query_indexed(
@@ -624,22 +604,14 @@ def bbox_query_indexed(
     Falls back to the plain predicate when the covering set is too big
     for a useful IN-list (large boxes scan most of the table anyway).
 
-    The covering set matches the id space of the ``cell_col`` the
-    table was written with: H3-spec-derived ids (parity-gated against the published H3 spec; see h3core.py scope note) by default
-    (cells.h3_cover_bbox — guaranteed-hit sampled cover), the planar
-    grid under SPARK_GRAFT_PLANAR_HEX=1 — mixing the two would
-    silently filter everything out (round-4 review finding).
+    The covering set is in the id space ``with_cells`` writes to
+    ``cell_col``: H3-spec-derived ids, covered by cells.h3_cover_bbox
+    (guaranteed-hit sampled cover).
     """
-    if cell_fn.use_real_h3():
-        # probe count ≈ 4x the cell count; keep the effective cell
-        # budget aligned with the planar path's 50k
-        if cell_fn.h3_cover_size(x0, y0, x1, y1, cfg.hex_res) > 200_000:
-            return bbox_query(features, x0, y0, x1, y1)
-        cover = cell_fn.h3_cover_bbox(x0, y0, x1, y1, cfg.hex_res)
-    else:
-        if cell_fn.hex_cover_size(x0, y0, x1, y1, cfg.hex_res) > 50_000:
-            return bbox_query(features, x0, y0, x1, y1)
-        cover = cell_fn.hex_cover_bbox(x0, y0, x1, y1, cfg.hex_res)
+    # probe count ≈ 4x the cell count: a ~50k-cell budget
+    if cell_fn.h3_cover_size(x0, y0, x1, y1, cfg.hex_res) > 200_000:
+        return bbox_query(features, x0, y0, x1, y1)
+    cover = cell_fn.h3_cover_bbox(x0, y0, x1, y1, cfg.hex_res)
     return bbox_query(
         features.where(F.col(cell_col).isin(cover)), x0, y0, x1, y1
     )
@@ -652,8 +624,6 @@ def knn_join_h3(
     res: int = 4,
     point_id: str = "id",
     query_id: str = "qid",
-    seed_ring: int = 1,
-    max_cover: int = 20_000,
     stats_out: dict | None = None,
 ) -> DataFrame:
     """Exact kNN with the table keyed by H3-SPEC cell ids — the same
@@ -666,14 +636,14 @@ def knn_join_h3(
 
     Exactness scheme (the real grid has no clean planar ring-distance
     guarantee — cells vary ~2x in size): pass 1 gathers candidates
-    from `h3core.grid_disk(qcell, seed_ring)` — an equi-join on cell
+    from `h3core.grid_disk(qcell, _KNN_H3_SEED_RING)` — an equi-join on cell
     id, each query touching ≤ 1+3R(R+1) cells. Its per-query kth
     distance r upper-bounds the true kth (subset top-k ≥ global
     top-k); pass 2 re-gathers from the GUARANTEED-HIT cover
     (`h3_cover_bbox`) of the degree bbox [q ± r], which contains every
     cell owning a point within distance r, so the pass-2 top-k is
     provably exact. Queries with < k pass-1 candidates, or whose cover
-    would exceed ``max_cover`` cells, fall back to an exact broadcast
+    would exceed ``_KNN_H3_MAX_COVER`` cells, fall back to an exact broadcast
     brute-force pass over just those queries.
 
     Scale shape: the point table shuffles on cell id once per pass;
@@ -692,28 +662,12 @@ def knn_join_h3(
     """
     from ..functions import h3core
 
-    pts = points.select(
-        F.col(point_id).alias("_pid"),
-        F.col("lon").cast("double").alias("_px"),
-        F.col("lat").cast("double").alias("_py"),
-    ).withColumn("_pcell", _hex_udf(res)(F.col("_px"), F.col("_py"))).persist()
-
-    qs = queries.select(
-        F.col(query_id).alias("_qid"),
-        F.col("lon").cast("double").alias("_qx"),
-        F.col("lat").cast("double").alias("_qy"),
-    ).withColumn("_qcell", _hex_udf(res)(F.col("_qx"), F.col("_qy")))
-
-    def _topk(cand: DataFrame) -> DataFrame:
-        d2 = (F.col("_px") - F.col("_qx")) ** 2 + (F.col("_py") - F.col("_qy")) ** 2
-        w = Window.partitionBy("_qid").orderBy(
-            F.sqrt(d2).asc(), F.col("_pid").asc()
-        )
-        return (
-            cand.withColumn("dist", F.sqrt(d2))
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-        )
+    pts = _knn_points(points, point_id).withColumn(
+        "_pcell", _hex_udf(res)(F.col("_px"), F.col("_py"))
+    ).persist()
+    qs = _knn_queries(queries, query_id).withColumn(
+        "_qcell", _hex_udf(res)(F.col("_qx"), F.col("_qy"))
+    )
 
     @F.pandas_udf(ArrayType(LongType()))
     def _disk(cell: pd.Series) -> pd.Series:
@@ -721,7 +675,7 @@ def knn_join_h3(
         # DISTINCT cells (h3core.grid_disk_batch): numpy digit-walk
         # passes per ring, not per-cell Python
         uniq = np.unique(cell.to_numpy().astype(np.int64))
-        oi, oc, _orr = h3core.grid_disk_batch(uniq, seed_ring)
+        oi, oc, _orr = h3core.grid_disk_batch(uniq, _KNN_H3_SEED_RING)
         per: dict = {int(uniq[i]): [] for i in range(len(uniq))}
         for i, c2 in zip(oi.tolist(), oc.tolist()):
             per[int(uniq[i])].append(c2)
@@ -734,7 +688,7 @@ def knn_join_h3(
     exp1 = qs.withColumn("_cells", _disk("_qcell")).select(
         "_qid", "_qx", "_qy", F.explode_outer("_cells").alias("_pcell")
     )
-    topk1 = _topk(exp1.join(pts, "_pcell", "inner")).localCheckpoint(eager=True)
+    topk1 = _topk(exp1.join(pts, "_pcell", "inner"), k).localCheckpoint(eager=True)
     stat1 = topk1.groupBy("_qid").agg(
         F.count("*").alias("_n1"), F.max("dist").alias("_kth1")
     )
@@ -747,7 +701,7 @@ def knn_join_h3(
     edge = h3core.h3_edge_deg(res)
     grid_w = (F.lit(2.0) * F.col("_kth1") + F.lit(5.0 * edge)) / F.lit(0.55 * edge)
     cover_est = grid_w * grid_w
-    is_pass2 = (F.col("_n1") == k) & (cover_est <= F.lit(float(max_cover)))
+    is_pass2 = (F.col("_n1") == k) & (cover_est <= F.lit(float(_KNN_H3_MAX_COVER)))
     is_brute = ~is_pass2
 
     tri = st.agg(
@@ -780,7 +734,7 @@ def knn_join_h3(
             "_cells", _cover("_qx", "_qy", "_kth1")
         ).select("_qid", "_qx", "_qy", F.explode_outer("_cells").alias("_pcell"))
         parts.append(
-            _topk(p2.join(pts, "_pcell", "inner")).select(
+            _topk(p2.join(pts, "_pcell", "inner"), k).select(
                 "_qid", "_pid", "dist", "rank",
                 F.lit(False).alias("_is_brute"),
             )
@@ -788,7 +742,7 @@ def knn_join_h3(
     if n_br > 0:
         brute_q = st.where(is_brute).select("_qid", "_qx", "_qy")
         parts.append(
-            _topk(brute_q.crossJoin(pts.drop("_pcell"))).select(
+            _topk(brute_q.crossJoin(pts.drop("_pcell")), k).select(
                 "_qid", "_pid", "dist", "rank",
                 F.lit(True).alias("_is_brute"),
             )
@@ -803,11 +757,6 @@ def knn_join_h3(
         F.sum(F.when(F.col("_is_brute"), 1).otherwise(0)).alias("n_brute_rows"),
         F.count(F.lit(1)).alias("n_rows"),
     )
-    out = result.select(
-        F.col("_qid").alias(query_id),
-        F.col("_pid").alias(point_id),
-        "dist",
-        "rank",
-    ).localCheckpoint(eager=True)
+    out = _knn_result(result, query_id, point_id).localCheckpoint(eager=True)
     pts.unpersist()
     return out

@@ -1,10 +1,13 @@
 """Session defaults that depend on the host."""
 
 import os
+from pathlib import Path
 
 import pytest
 
 from ingest_spark.session import default_parallelism, driver_memory
+
+PKG = Path(__file__).resolve().parents[1] / "ingest_spark"
 
 MEMINFO_15G = """MemTotal:       15995440 kB
 MemFree:        14313108 kB
@@ -41,3 +44,16 @@ def test_default_parallelism_fits_the_host(master, cpus, expected):
 @pytest.mark.skipif("SPARK_GRAFT_LOCAL_DIR" in os.environ, reason="spill dir chosen by the caller")
 def test_spill_dir_left_to_spark_by_default(spark):
     assert spark.sparkContext.getConf().get("spark.local.dir") is None
+
+
+def test_environment_is_read_only_by_the_session():
+    """The process environment holds deployment settings, and session.py
+    reads them: no other engine module chooses a code path from it."""
+    offenders = [
+        f"{path.relative_to(PKG)}:{n}"
+        for path in sorted(PKG.rglob("*.py"))
+        if path != PKG / "session.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if "os.environ" in line or "os.getenv" in line
+    ]
+    assert offenders == []
