@@ -35,6 +35,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import DEFAULT, EngineConfig
@@ -52,9 +53,14 @@ class Changeset:
 
 
 def _ids_df(spark: SparkSession, ids: list[int]) -> DataFrame:
-    if ids:
-        return spark.createDataFrame([(int(i),) for i in sorted(set(ids))], "id long")
-    return spark.createDataFrame([], "id long")
+    # Arrow-path createDataFrame (see pages.fixture_pages): a tuple list
+    # ships pickled rows through one Python-worker task per partition.
+    # An empty pandas frame falls back to that path; range(0) has none.
+    if not ids:
+        return spark.range(0)
+    return spark.createDataFrame(
+        pd.DataFrame({"id": sorted({int(i) for i in ids})}), "id long"
+    )
 
 
 def _changed_ids(

@@ -400,27 +400,28 @@ def knn_join(
     (qid, id, dist, rank) with rank 1..k ordered by (dist, id) —
     deterministic tiebreak.
 
-    Scale shape: per round, the big point table shuffles on cell id
-    once and each query touches only 1+3R(R+1) cells; the driver loop
-    runs O(log) rounds. Stragglers (sparse regions) fall back to a
-    broadcast brute-force pass over the remaining queries only.
+    Scale shape: two passes, no driver round loop. Pass 1 probes each
+    query's seeded rings; pass 2 re-probes only the queries pass 1
+    could not prove exact, at the ring their pass-1 kth distance
+    demands. In each pass the big point table joins on cell id and a
+    query touches only 1+3R(R+1) cells. Stragglers (sparse regions)
+    fall back to a broadcast brute-force pass over those queries only.
 
     Ring seeding is PER QUERY from the query cell's own point count
     (one narrow two-column shuffle of the point table): a clustered
     query starts at ring 1, a sparse one jumps ahead — no global
     density estimate to overshoot on skewed data, and the first
-    explode stays bounded by the seed cap. Per-round top-k caches are
-    released before returning (the result is materialized once via an
-    eager localCheckpoint, so the union over rounds never recomputes
-    unpersisted data).
+    explode stays bounded by the seed cap. The point and pass-1 caches
+    are released before returning (the result is materialized once via
+    an eager localCheckpoint, so the union over the passes never
+    recomputes unpersisted data).
     """
     edge = cell_fn.hex_edge_deg(res)
 
-    # The projected 4-column point table is consumed once per round
-    # (candidate join) plus once by the cell-count seed — persist it for
-    # the loop's lifetime (MEMORY_AND_DISK default: spills, never OOMs)
-    # so the cell-assignment UDF and upstream scan run exactly once;
-    # released with the round caches before returning.
+    # The projected 4-column point table is consumed once per pass
+    # (candidate join) plus once by the cell-count seed — persist it
+    # until the result is materialized (MEMORY_AND_DISK default: spills,
+    # never OOMs) so the upstream scan runs exactly once.
     pts = _knn_points(points, point_id).withColumn(
         # BUILTIN planar grid unconditionally: the ring-expansion
         # geometry (hex_k_ring + the edge-distance guarantee) is a
@@ -434,10 +435,10 @@ def knn_join(
     )
 
     # Per-query ring seed from the query cell's own point count: the
-    # goal is resolving in ONE round (every driver round is a full job),
-    # so invert the guarantee itself. At local density d = local_cn /
+    # goal is resolving in pass 1 (pass 2 is a second probe join), so
+    # invert the guarantee itself. At local density d = local_cn /
     # cell_area the expected kth-NN radius is r_k = sqrt(k/(pi*d)) =
-    # edge*sqrt(1.5*sqrt(3)*k/(pi*local_cn)); the round resolves when
+    # edge*sqrt(1.5*sqrt(3)*k/(pi*local_cn)); pass 1 resolves when
     # edge*(1.5(R+1)-2) >= r_k, i.e. R >= (r_k/edge + 2)/1.5 - 1. A
     # 1.5x safety factor absorbs local fluctuation; the cap bounds the
     # first explode; empty query cells (local=0) hit the cap. The
@@ -629,7 +630,7 @@ def knn_join_h3(
     """Exact kNN with the table keyed by H3-SPEC cell ids — the same
     storage contract a reference-indexed table carries (the spatial
     key IS the contract, src/lib.rs:24-27), so a user who indexed with
-    `hex_cell` (real-H3 path) can kNN directly on those ids without
+    `hex_cell` can kNN directly on those ids without
     re-keying onto the planar ring grid. Same output contract as
     knn_join: (qid, id, dist, rank), degree-Euclidean metric,
     (dist, id) tiebreak.

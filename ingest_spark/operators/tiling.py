@@ -777,8 +777,13 @@ def _quadtree_distributed(
         order = _emission_order(lp.keys())
         for p, b in lp.items():
             num_rows.append((c, p, order[p], b[0], b[1], b[2], b[3]))
+    # Arrow-path createDataFrame (see pages.fixture_pages): no
+    # Python-worker scan; num_rows is never empty (over-budget cells
+    # always yield leaves)
     num_df = spark.createDataFrame(
-        num_rows,
+        pd.DataFrame(num_rows, columns=[
+            "grid_cell", "_leaf", "bucket", "bminx", "bminy", "bmaxx", "bmaxy",
+        ]),
         "grid_cell int, _leaf string, bucket int, "
         "bminx double, bminy double, bmaxx double, bmaxy double",
     )

@@ -10,13 +10,17 @@ intact and whose inputs' snapshots are unchanged.
 On a cluster this maps 1:1 onto Iceberg: stage output = table commit,
 snapshot id = Iceberg snapshot id, manifest = a tiny control table.
 No Iceberg JVM runtime ships in this sandbox; the contract is
-implemented by three interchangeable SnapshotBackends — parquet dirs
-+ JSON manifest (here), immutable snapshot dirs + pointer swap
-(here), and the real Iceberg v2 metadata layout written in pure
-Python (``plans/iceberg.py``: field-id schemas, Avro manifests,
-optimistic version commits) — with identical resume semantics
-(skip-complete, invalidate on upstream change) proven across all
-three by TestSnapshotBackendSeam.
+implemented by two SnapshotBackends with identical resume semantics
+(skip-complete, invalidate on upstream change), proven for both by
+TestSnapshotBackendSeam:
+
+- ``ParquetManifestBackend`` (here, the default): parquet dirs + a
+  JSON manifest, for stage checkpoints;
+- ``IcebergMetadataBackend`` (``plans/iceberg.py``): the Iceberg v2
+  metadata layout written in pure Python (field-id schemas, Avro
+  manifests, optimistic version commits, time travel, expiry,
+  file-level MERGE), for every table that is merged, time-travelled
+  or replaced in place.
 
 A stage runs one Spark action, its commit: the row count and content
 digest that go into the snapshot id are observed on the committed
@@ -39,26 +43,22 @@ from .metrics import MetricsCollector
 
 
 class SnapshotBackend:
-    """The storage seam: exactly the calls a real lakehouse catalog
-    (Iceberg) would replace, so the resume semantics (skip-complete,
-    upstream invalidation, affected-only merge — engine-owned, tested
-    in TestCheckpointResume) are shared by the parquet simulation and a
-    future catalog adapter:
+    """The storage seam of run_stage: exactly the calls a lakehouse
+    catalog makes, so the resume semantics (skip-complete, upstream
+    invalidation — engine-owned, tested in TestCheckpointResume) hold
+    for every store:
 
-    - ``commit``          → Iceberg table commit (atomic snapshot);
-                            writes ``df`` itself (run_stage reads an
-                            observation off that write) and returns
-                            the committed table, read back with the
-                            frame's own schema (no footer inference
-                            job)
-    - ``read``            → catalog table load
-    - ``is_complete``     → committed-snapshot existence check
-    - ``merge_overwrite`` → ``MERGE INTO`` (delete matched keys, insert
-                            new rows) as one commit
+    - ``commit``      → table commit (atomic snapshot); writes ``df``
+                        itself (run_stage reads an observation off that
+                        write) and returns the committed table, read
+                        back with the frame's own schema (no footer
+                        inference job)
+    - ``read``        → catalog table load
+    - ``is_complete`` → committed-snapshot existence check
 
     On Iceberg the snapshot id would come from the commit itself;
-    the simulation derives a content-addressed id in run_stage (same
-    invalidation power, documented there)."""
+    run_stage derives a content-addressed id (same invalidation power,
+    documented there)."""
 
     def commit(self, df: DataFrame, path: str, partition_by=None) -> DataFrame:
         raise NotImplementedError
@@ -69,22 +69,12 @@ class SnapshotBackend:
     def is_complete(self, path: str) -> bool:
         raise NotImplementedError
 
-    def merge_overwrite(
-        self,
-        spark: SparkSession,
-        path: str,
-        delete_keys: DataFrame,
-        insert_rows: DataFrame,
-        key: str = "id",
-    ) -> DataFrame:
-        raise NotImplementedError
-
 
 class ParquetManifestBackend(SnapshotBackend):
-    """Sandbox implementation: parquet dirs + _SUCCESS markers; MERGE is
-    anti-join + union re-written through a staging dir swap (the
-    overwrite is atomic at the os.replace granularity of the final
-    rename — a real catalog makes the whole commit atomic)."""
+    """Stage checkpoints as parquet dirs + ``_SUCCESS`` markers. A
+    stage's output is only ever rewritten whole, by a re-run of that
+    stage; tables that are merged, time-travelled or replaced in place
+    use ``plans/iceberg.py``."""
 
     def commit(self, df, path, partition_by=None):
         writer = df.write.mode("overwrite")
@@ -93,136 +83,11 @@ class ParquetManifestBackend(SnapshotBackend):
         writer.parquet(path)
         return df.sparkSession.read.schema(df.schema).parquet(path)
 
-    def _recover(self, path):
-        """Heal a crash between merge_overwrite's two renames: if the
-        live dir is missing/incomplete but the backup is complete,
-        restore it (same recovery the streaming tile swap does)."""
-        backup = path + "._merge_old"
-        if not os.path.exists(os.path.join(path, "_SUCCESS")) and os.path.exists(
-            os.path.join(backup, "_SUCCESS")
-        ):
-            if os.path.exists(path):
-                import shutil
-
-                shutil.rmtree(path)
-            os.rename(backup, path)
-
     def read(self, spark, path):
-        self._recover(path)
         return spark.read.parquet(path)
 
     def is_complete(self, path):
-        self._recover(path)
         return os.path.exists(os.path.join(path, "_SUCCESS"))
-
-    def merge_overwrite(self, spark, path, delete_keys, insert_rows, key="id"):
-        import shutil
-
-        target = self.read(spark, path)
-        merged = target.join(delete_keys.select(key), key, "left_anti").unionByName(
-            insert_rows.select(*target.columns)
-        )
-        staging = path + "._merge_staging"
-        merged.write.mode("overwrite").parquet(staging)
-        backup = path + "._merge_old"
-        if os.path.exists(backup):
-            shutil.rmtree(backup)
-        os.rename(path, backup)  # crash after this line is healed by
-        os.rename(staging, path)  # _recover() on the next read
-        shutil.rmtree(backup)
-        return self.read(spark, path)
-
-
-class SnapshotDirBackend(SnapshotBackend):
-    """Second seam implementation — the Iceberg-shaped one: every
-    commit writes an IMMUTABLE snapshot directory
-    (``{path}/snap-{n}``) and then atomically swaps a pointer file
-    (``{path}/_current``, os.replace) — the same commit protocol as an
-    Iceberg metadata-pointer swap. Properties the parquet-rename
-    backend can't offer, which is exactly why it proves the seam:
-
-    - no destructive rename: a crash at ANY point leaves the table
-      serving the previous snapshot (an orphan data dir at worst);
-      there is no recovery path because there is no broken state,
-    - old snapshots stay readable (``read_snapshot`` = time travel;
-      ``expire_snapshots`` = GC),
-    - MERGE reads snap-N while writing snap-N+1 — no
-      read-while-overwrite hazard.
-    """
-
-    def _pointer(self, path: str) -> str:
-        return os.path.join(path, "_current")
-
-    def _current(self, path: str) -> "str | None":
-        try:
-            with open(self._pointer(path)) as f:
-                name = f.read().strip()
-        except FileNotFoundError:
-            return None
-        return os.path.join(path, name) if name else None
-
-    def _next_snap(self, path: str) -> str:
-        os.makedirs(path, exist_ok=True)
-        existing = [
-            int(d.split("-", 1)[1])
-            for d in os.listdir(path)
-            if d.startswith("snap-") and d.split("-", 1)[1].isdigit()
-        ]
-        return f"snap-{(max(existing) + 1) if existing else 0}"
-
-    def _swap(self, path: str, snap_name: str) -> None:
-        tmp = self._pointer(path) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(snap_name)
-        os.replace(tmp, self._pointer(path))  # the atomic commit point
-
-    def commit(self, df, path, partition_by=None):
-        snap = self._next_snap(path)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(os.path.join(path, snap))
-        self._swap(path, snap)
-        return df.sparkSession.read.schema(df.schema).parquet(
-            os.path.join(path, snap))
-
-    def read(self, spark, path):
-        cur = self._current(path)
-        if cur is None:
-            raise FileNotFoundError(f"no committed snapshot at {path}")
-        return spark.read.parquet(cur)
-
-    def read_snapshot(self, spark, path, n: int):
-        """Time travel: read snapshot ``n`` regardless of the pointer."""
-        return spark.read.parquet(os.path.join(path, f"snap-{n}"))
-
-    def is_complete(self, path):
-        cur = self._current(path)
-        return cur is not None and os.path.exists(os.path.join(cur, "_SUCCESS"))
-
-    def merge_overwrite(self, spark, path, delete_keys, insert_rows, key="id"):
-        target = self.read(spark, path)
-        merged = target.join(delete_keys.select(key), key, "left_anti").unionByName(
-            insert_rows.select(*target.columns)
-        )
-        return self.commit(merged, path)  # reads snap-N, writes snap-N+1
-
-    def expire_snapshots(self, path: str, keep: int = 1) -> int:
-        """Drop all but the newest ``keep`` snapshots (never the
-        current one). Returns the number removed."""
-        import shutil
-
-        cur = self._current(path)
-        snaps = sorted(
-            (d for d in os.listdir(path) if d.startswith("snap-")),
-            key=lambda d: int(d.split("-", 1)[1]),
-        )
-        victims = [
-            s for s in snaps[:-keep] if os.path.join(path, s) != cur
-        ] if keep > 0 else []
-        for s in victims:
-            shutil.rmtree(os.path.join(path, s))
-        return len(victims)
 
 
 DEFAULT_BACKEND = ParquetManifestBackend()

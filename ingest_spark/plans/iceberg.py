@@ -1,9 +1,10 @@
 """Iceberg-spec table metadata backend — a real commit path, no jars.
 
-`IcebergMetadataBackend` is the third `SnapshotBackend` implementation
-(alongside the parquet-rename and snapshot-dir backends in
-checkpoint.py) and writes the PUBLIC Apache Iceberg table spec (v2)
-metadata layout byte-for-byte in pure Python:
+`IcebergMetadataBackend` is the `SnapshotBackend` for every table that
+is merged, time-travelled or replaced in place (stage checkpoints use
+the parquet backend in checkpoint.py), and the engine's only MERGE. It
+writes the PUBLIC Apache Iceberg table spec (v2) metadata layout
+byte-for-byte in pure Python:
 
 - ``metadata/v{N}.metadata.json`` — format-version 2 table metadata:
   table-uuid, schemas (Spark schema → Iceberg JSON schema with field

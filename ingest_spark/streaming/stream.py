@@ -107,42 +107,24 @@ def stream_tile_maintenance(
     Layout under ``store_root``: ``features/batch_id=N/`` (one
     hive-partition dir per micro-batch, written with OVERWRITE — a
     foreachBatch retry of batch N rewrites the SAME dir, so the
-    at-least-once delivery never duplicates features) and ``tiles/``
-    (replaced per batch via staging + backup + rename: the old store is
-    renamed aside before the new one lands, so a crash at any single
-    point leaves either the old or the new store recoverable — the
-    residual window between the two renames surfaces as a present
-    ``.old`` backup that the next batch's reader restores. On a real
-    deployment both are one Iceberg commit; this is the sandbox analog,
-    same caveat as plans/checkpoint.py).
+    at-least-once delivery never duplicates features) and ``tiles/``,
+    an Iceberg table (plans/iceberg.py) replaced per batch by one
+    commit: a crash at any point leaves the previous snapshot serving.
+    Older snapshots are expired right after each commit, so the table
+    holds one snapshot and its live files.
 
     Scale shape per batch: one append write, tile-id semi/anti-joins,
     and re-pack restricted to affected tiles' features — unaffected
     tiles stream through the anti-join by key only.
     """
     import os
-    import shutil
 
     from ..operators.tiling import vector_tiles, with_tile_xyz
+    from ..plans.iceberg import IcebergMetadataBackend
 
     feats_path = os.path.join(store_root, "features")
     tiles_path = os.path.join(store_root, "tiles")
-    backup_path = tiles_path + ".old"
-
-    def _read_tiles(spark):
-        """Current tile store, recovering from a crash between the two
-        swap renames (live dir missing, backup present)."""
-        if not os.path.exists(os.path.join(tiles_path, "_SUCCESS")):
-            if os.path.exists(os.path.join(backup_path, "_SUCCESS")):
-                # a crash mid-write can leave a partial live dir (no
-                # _SUCCESS): clear it or os.rename raises — mirrors
-                # ParquetManifestBackend._recover
-                if os.path.exists(tiles_path):
-                    shutil.rmtree(tiles_path)
-                os.rename(backup_path, tiles_path)
-            else:
-                return None
-        return spark.read.parquet(tiles_path)
+    tiles = IcebergMetadataBackend()
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -169,23 +151,13 @@ def stream_tile_maintenance(
                 .join(affected, ["tile_z", "tile_x", "tile_y"], "left_semi")
                 .drop("tile_z", "tile_x", "tile_y")
             )
-            repacked = vector_tiles(affected_feats, z)
-            existing = _read_tiles(spark)
-            if existing is not None:
-                kept = existing.join(
+            new_tiles = vector_tiles(affected_feats, z)
+            if tiles.is_complete(tiles_path):
+                new_tiles = tiles.read(spark, tiles_path).join(
                     affected, ["tile_z", "tile_x", "tile_y"], "left_anti"
-                )
-                new_tiles = kept.unionByName(repacked)
-            else:
-                new_tiles = repacked
-            staging = tiles_path + f"._staging_{batch_id}"
-            new_tiles.write.mode("overwrite").parquet(staging)
-            if os.path.exists(backup_path):
-                shutil.rmtree(backup_path)
-            if os.path.exists(tiles_path):
-                os.rename(tiles_path, backup_path)
-            os.rename(staging, tiles_path)
-            shutil.rmtree(backup_path, ignore_errors=True)
+                ).unionByName(new_tiles)
+            tiles.commit(new_tiles, tiles_path)
+            tiles.expire_snapshots(tiles_path, keep=1)
         finally:
             batch_df.unpersist()
 

@@ -29,12 +29,11 @@ def main() -> None:
     ap.add_argument("--no-ingest-way", action="store_true")
     ap.add_argument("--no-ingest-relation", action="store_true")
     ap.add_argument(
-        "--backend", choices=("parquet", "snapdir", "iceberg"),
+        "--backend", choices=("parquet", "iceberg"),
         default="parquet",
-        help="stage snapshot store: in-place parquet, immutable "
-             "snapshot dirs, or the Iceberg v2 metadata layout "
-             "(plans/iceberg.py — Avro manifests, optimistic version "
-             "commits, time travel)",
+        help="stage snapshot store: parquet dirs + manifest, or the "
+             "Iceberg v2 metadata layout (plans/iceberg.py — Avro "
+             "manifests, optimistic version commits, time travel)",
     )
     args = ap.parse_args()
 
@@ -55,10 +54,7 @@ def main() -> None:
         grid = (gx, gy)
 
     backend = None
-    if args.backend == "snapdir":
-        from ingest_spark.plans.checkpoint import SnapshotDirBackend
-        backend = SnapshotDirBackend()
-    elif args.backend == "iceberg":
+    if args.backend == "iceberg":
         from ingest_spark.plans.iceberg import IcebergMetadataBackend
         backend = IcebergMetadataBackend()
 

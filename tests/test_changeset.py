@@ -207,3 +207,17 @@ class TestMegaClosure:
         one = merged.limit(1).collect()[0]
         d = gr.decode(bytes(one.encoded))
         assert d["positions"][:2] == [5.0, 5.0]
+
+
+@pytest.mark.parametrize("deletes", [[7, 3, 7], []])
+def test_changed_ids_start_no_python_worker(spark, deletes):
+    """The id frames are built JVM-side (Arrow, or range(0) when empty):
+    a pickled tuple list would run one Python-worker task per partition
+    for a handful of ids, three times per apply_changeset."""
+    from ingest_spark.operators.changeset import _changed_ids
+
+    upsert = spark.range(5, 6)
+    ids = _changed_ids(spark, upsert, deletes)
+    lineage = ids._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage
+    assert sorted(r.id for r in ids.collect()) == sorted({*deletes, 5})

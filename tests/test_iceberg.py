@@ -11,6 +11,7 @@ test_pipeline.py.
 
 import json
 import os
+from pathlib import Path
 
 import pytest
 
@@ -18,6 +19,22 @@ from ingest_spark.functions import avro
 from ingest_spark.plans.iceberg import (
     CommitConflict, IcebergMetadataBackend, spark_schema_to_iceberg,
 )
+
+PKG = Path(__file__).resolve().parents[1] / "ingest_spark"
+
+
+def test_tables_are_replaced_only_by_the_iceberg_commit():
+    """Replacing a table in place is the Iceberg backend's commit and
+    expiry: no other engine module renames or deletes a directory tree
+    to swap a table."""
+    offenders = [
+        f"{path.relative_to(PKG)}:{n}"
+        for path in sorted(PKG.rglob("*.py"))
+        if path != PKG / "plans" / "iceberg.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if "os.rename" in line or "shutil.rmtree" in line
+    ]
+    assert offenders == []
 
 
 class TestAvro:
@@ -159,6 +176,11 @@ class TestIcebergBackend:
                 raise CommitConflict("always")
         with pytest.raises(CommitConflict):
             Stuck(max_retries=2).commit(_df(spark, [(0, "x")]), path)
+        # data written but never published: the previous snapshot
+        # still serves, and the next commit supersedes it
+        assert {r.id for r in b.read(spark, path).collect()} == {9}
+        b.commit(_df(spark, [(2, "b")]), path)
+        assert {r.id for r in b.read(spark, path).collect()} == {2}
 
     def test_partitioned_commit_and_read(self, spark, tmp_path):
         b = IcebergMetadataBackend()

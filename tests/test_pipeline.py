@@ -1,5 +1,6 @@
 """Checkpointed pipeline: stages, resume, metrics, scan stats, streaming."""
 
+import glob
 import os
 
 import pytest
@@ -171,7 +172,7 @@ class TestCheckpointResume:
             s: e["rows"] for s, e in res.manifest.stages.items()
         }
 
-    @pytest.mark.parametrize("bname", ["parquet", "snapdir", "iceberg"])
+    @pytest.mark.parametrize("bname", ["parquet", "iceberg"])
     def test_stage_summary_per_written_file(self, spark, tmp_path, bname):
         """One metrics row per committed file, partitioned stages
         included, and the stage's rows equal the manifest's."""
@@ -262,8 +263,10 @@ class TestStreamTileMaintenance:
         maintained tiles must equal a full vector_tiles rebuild over
         everything ingested so far."""
         from ingest_spark.operators.tiling import vector_tiles
+        from ingest_spark.plans.iceberg import IcebergMetadataBackend
         from ingest_spark.streaming import stream as strm
 
+        tiles = IcebergMetadataBackend()
         src = str(tmp_path / "in")
         store = str(tmp_path / "store")
         ckpt = str(tmp_path / "ck")
@@ -288,7 +291,7 @@ class TestStreamTileMaintenance:
             spark.readStream.schema(schema).option("maxFilesPerTrigger", 8).parquet(src)
         )
         strm.stream_tile_maintenance(stream, store, ckpt, z).awaitTermination(120)
-        got = tile_map(spark.read.parquet(f"{store}/tiles"))
+        got = tile_map(tiles.read(spark, f"{store}/tiles"))
         want = tile_map(vector_tiles(spark.read.parquet(f"{store}/features"), z))
         assert got == want and len(got) == 2
 
@@ -298,11 +301,18 @@ class TestStreamTileMaintenance:
             spark.readStream.schema(schema).option("maxFilesPerTrigger", 8).parquet(src)
         )
         strm.stream_tile_maintenance(stream, store, ckpt, z).awaitTermination(120)
-        got = tile_map(spark.read.parquet(f"{store}/tiles"))
+        got = tile_map(tiles.read(spark, f"{store}/tiles"))
         all_feats = spark.read.parquet(f"{store}/features")
         assert all_feats.count() == 4
         want = tile_map(vector_tiles(all_feats, z))
         assert got == want and len(got) == 3
+
+        # each batch's commit expires the one before: one snapshot, and
+        # no data file under tiles/ outside its live set
+        md = tiles.current_metadata(f"{store}/tiles")
+        assert len(md["snapshots"]) == 1
+        on_disk = glob.glob(f"{store}/tiles/data/**/*.parquet", recursive=True)
+        assert sorted(on_disk) == sorted(tiles._live_files(md))
 
 
 class TestStreamRetryIdempotency:
@@ -312,6 +322,7 @@ class TestStreamRetryIdempotency:
         NOT duplicate features or corrupt tiles — the per-batch
         partition dir is overwritten, not appended."""
         from ingest_spark.operators.tiling import vector_tiles
+        from ingest_spark.plans.iceberg import IcebergMetadataBackend
         from ingest_spark.streaming import stream as strm
 
         src = str(tmp_path / "in")
@@ -334,7 +345,7 @@ class TestStreamRetryIdempotency:
             f"{store}/features"
         )
         assert feats.count() == 2  # not 4
-        tiles = spark.read.parquet(f"{store}/tiles")
+        tiles = IcebergMetadataBackend().read(spark, f"{store}/tiles")
         want = {
             (r.tile_x, r.tile_y): (r.n_features, bytes(r.payload))
             for r in vector_tiles(feats.drop("batch_id"), 5).collect()
@@ -347,14 +358,11 @@ class TestStreamRetryIdempotency:
 
 
 def _make_backend(name):
-    from ingest_spark.plans.checkpoint import (
-        ParquetManifestBackend, SnapshotDirBackend,
-    )
+    from ingest_spark.plans.checkpoint import ParquetManifestBackend
     from ingest_spark.plans.iceberg import IcebergMetadataBackend
 
     return {
         "parquet": ParquetManifestBackend,
-        "snapdir": SnapshotDirBackend,
         "iceberg": IcebergMetadataBackend,
     }[name]()
 
@@ -362,11 +370,10 @@ def _make_backend(name):
 class TestSnapshotBackendSeam:
     """The storage seam a real catalog (Iceberg) replaces: run_stage's
     resume semantics must hold for ANY SnapshotBackend — proven by
-    parametrizing over two structurally different implementations
-    (in-place parquet + rename-swap vs immutable snapshot dirs +
-    pointer swap); merge_overwrite is the MERGE INTO analog."""
+    parametrizing over both implementations (parquet dirs + manifest
+    vs the Iceberg v2 metadata layout)."""
 
-    @pytest.mark.parametrize("bname", ["parquet", "snapdir", "iceberg"])
+    @pytest.mark.parametrize("bname", ["parquet", "iceberg"])
     def test_run_stage_with_explicit_backend(self, spark, tmp_path, bname):
         from ingest_spark.plans.checkpoint import Manifest, run_stage
 
@@ -385,7 +392,7 @@ class TestSnapshotBackendSeam:
         df2 = run_stage(spark, m2, "s", build, backend=backend)
         assert df2.count() == 7 and len(calls) == 1  # skip-complete held
 
-    @pytest.mark.parametrize("bname", ["parquet", "snapdir", "iceberg"])
+    @pytest.mark.parametrize("bname", ["parquet", "iceberg"])
     def test_upstream_change_invalidates_downstream(self, spark, tmp_path, bname):
         from ingest_spark.plans.checkpoint import Manifest, run_stage
 
@@ -408,67 +415,6 @@ class TestSnapshotBackendSeam:
         )
         assert len(calls) == 2
 
-    @pytest.mark.parametrize("bname", ["parquet", "snapdir", "iceberg"])
-    def test_merge_overwrite_semantics(self, spark, tmp_path, bname):
-        """delete matched keys + insert new rows in one commit; the
-        store stays readable afterwards (swap is crash-bounded)."""
-        import os
-
-        backend = _make_backend(bname)
-        path = str(tmp_path / "tbl")
-        backend.commit(
-            spark.createDataFrame(
-                [(1, "a"), (2, "b"), (3, "c")], "id long, v string"
-            ),
-            path,
-        )
-        deletes = spark.createDataFrame([(2,), (3,)], "id long")
-        inserts = spark.createDataFrame([(3, "c2"), (4, "d")], "id long, v string")
-        out = backend.merge_overwrite(spark, path, deletes, inserts, key="id")
-        assert {(r.id, r.v) for r in out.collect()} == {
-            (1, "a"), (3, "c2"), (4, "d")
-        }
-        assert backend.is_complete(path)
-        assert not os.path.exists(path + "._merge_old")
-
-    def test_snapdir_crash_leaves_old_snapshot_serving(self, spark, tmp_path):
-        """A crash mid-commit (data written, pointer not swapped) must
-        leave the table serving the PREVIOUS snapshot — the property
-        the pointer-swap protocol buys over in-place renames."""
-        import os
-
-        from ingest_spark.plans.checkpoint import SnapshotDirBackend
-
-        backend = SnapshotDirBackend()
-        path = str(tmp_path / "tbl2")
-        backend.commit(spark.createDataFrame([(1, "a")], "id long, v string"), path)
-        # simulate crash: orphan data dir written, pointer untouched
-        spark.createDataFrame([(9, "z")], "id long, v string").write.parquet(
-            os.path.join(path, "snap-1")
-        )
-        assert backend.is_complete(path)
-        assert {(r.id, r.v) for r in backend.read(spark, path).collect()} == {(1, "a")}
-        # the next commit supersedes the orphan (monotonic numbering)
-        backend.commit(spark.createDataFrame([(2, "b")], "id long, v string"), path)
-        assert {(r.id, r.v) for r in backend.read(spark, path).collect()} == {(2, "b")}
-
-    def test_snapdir_time_travel_and_expiry(self, spark, tmp_path):
-        from ingest_spark.plans.checkpoint import SnapshotDirBackend
-
-        backend = SnapshotDirBackend()
-        path = str(tmp_path / "tbl3")
-        backend.commit(spark.createDataFrame([(1, "a")], "id long, v string"), path)
-        backend.merge_overwrite(
-            spark, path,
-            spark.createDataFrame([(1,)], "id long"),
-            spark.createDataFrame([(2, "b")], "id long, v string"),
-        )
-        # current = snap-1; snap-0 still readable (time travel)
-        assert {r.id for r in backend.read(spark, path).collect()} == {2}
-        assert {r.id for r in backend.read_snapshot(spark, path, 0).collect()} == {1}
-        assert backend.expire_snapshots(path, keep=1) == 1
-        assert {r.id for r in backend.read(spark, path).collect()} == {2}
-
     def test_map_column_change_changes_digest(self, spark, tmp_path):
         """A tags-only (MapType) value change must change the content
         digest — maps drive classification, so skipping them would fail
@@ -482,7 +428,7 @@ class TestSnapshotBackendSeam:
             snaps.append(m.snapshot_of("s"))
         assert snaps[0] != snaps[1]
 
-    @pytest.mark.parametrize("bname", ["parquet", "snapdir", "iceberg"])
+    @pytest.mark.parametrize("bname", ["parquet", "iceberg"])
     def test_run_stage_runs_no_job_beyond_the_commit(
         self, spark, tmp_path, bname, count_jobs
     ):
@@ -556,21 +502,3 @@ class TestStreamDedup:
         )
         got = sorted(r.text for r in spark.read.parquet(out).collect())
         assert got == ["other text", "same text"]
-
-
-class TestMergeCrashRecovery:
-    def test_backup_restored_after_interrupted_swap(self, spark, tmp_path):
-        """Simulate a crash between merge_overwrite's two renames: the
-        live dir is gone, only the backup remains — the next read/
-        is_complete must heal the table."""
-        import os
-
-        from ingest_spark.plans.checkpoint import ParquetManifestBackend
-
-        backend = ParquetManifestBackend()
-        path = str(tmp_path / "tbl")
-        spark.createDataFrame([(1, "a")], "id long, v string").write.parquet(path)
-        os.rename(path, path + "._merge_old")  # crash window state
-        assert backend.is_complete(path)  # heals
-        assert {(r.id, r.v) for r in backend.read(spark, path).collect()} == {(1, "a")}
-        assert not os.path.exists(path + "._merge_old")
