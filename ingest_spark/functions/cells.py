@@ -324,12 +324,31 @@ def hex_cover_bbox(x0: float, y0: float, x1: float, y1: float, res: int = 8) -> 
     return out
 
 
+def _h3_cover_window(x0: float, y0: float, x1: float, y1: float, res: int):
+    """The padded sampling window of h3_cover_bbox: (lon0, lon1, lat0,
+    lat1, step) in degrees. The pad is 2.5 edges of arc. At latitude φ
+    an arc spans 1/cos φ as many degrees of longitude (a path that stays
+    below latitude φmax moves at most arc/cos φmax in longitude), so the
+    lon pad is divided by cos of the window's most poleward latitude,
+    and a window that reaches a pole takes every longitude."""
+    edge = _h3core.h3_edge_deg(res)
+    pad = 2.5 * edge
+    lat0, lat1 = max(y0 - pad, -90.0), min(y1 + pad, 90.0)
+    phi = max(abs(lat0), abs(lat1))
+    lon_pad = pad / math.cos(math.radians(phi)) if phi < 90.0 else math.inf
+    lon0, lon1 = x0 - lon_pad, x1 + lon_pad
+    if lon1 - lon0 >= 360.0:
+        lon0, lon1 = -180.0, 180.0
+    return lon0, lon1, lat0, lat1, 0.55 * edge
+
+
 def h3_cover_bbox(x0: float, y0: float, x1: float, y1: float, res: int = 8) -> list[int]:
     """All REAL-H3 cells whose center could own a point inside the bbox
     — the covering IN-list for an indexed bbox read over a table keyed
     by `hex_cell` (H3 ids). Derived by GUARANTEED-HIT sampling:
     a cell owning a bbox point has its center within one cell diameter
-    of the box, so with the box padded by 2.5 edge-lengths the whole
+    of the box, so with the box padded by 2.5 edge-lengths of arc (the
+    lon pad widened toward the poles, `_h3_cover_window`) the whole
     hex lies inside the padded region, and a sample grid with step
     ≤ 0.55·edge lands at least one probe in it: the farthest grid
     point from any location is step·√2/2 ≈ 0.39·edge_mean, under the
@@ -339,14 +358,12 @@ def h3_cover_bbox(x0: float, y0: float, x1: float, y1: float, res: int = 8) -> l
     step was calibrated on the MEAN edge only and could in principle
     miss a worst-case minimum cell). The h3_cover_size budget guard
     bounds the probe count, so the denser grid costs only a constant
-    factor. (The lon step is NOT widened by 1/cos(lat): H3 cells get
-    WIDER in lon-degrees toward the poles, so the unscaled grid is
-    strictly denser than required — conservative, never lossy.)"""
-    edge = _h3core.h3_edge_deg(res)
-    pad = 2.5 * edge
-    step = 0.55 * edge
-    lats = np.arange(max(y0 - pad, -90.0), min(y1 + pad, 90.0) + step, step)
-    lons = np.arange(x0 - pad, x1 + pad + step, step)
+    factor. (The lon step is NOT widened by 1/cos(lat): a lon step
+    spans less arc toward the poles, so the unscaled grid is strictly
+    denser than required — conservative, never lossy.)"""
+    lon0, lon1, lat0, lat1, step = _h3_cover_window(x0, y0, x1, y1, res)
+    lats = np.arange(lat0, lat1 + step, step)
+    lons = np.arange(lon0, lon1 + step, step)
     glon, glat = np.meshgrid(lons, lats)
     ids = hex_cell(glon.ravel(), np.clip(glat.ravel(), -90.0, 90.0), res)
     return np.unique(ids).tolist()
@@ -355,10 +372,9 @@ def h3_cover_bbox(x0: float, y0: float, x1: float, y1: float, res: int = 8) -> l
 def h3_cover_size(x0: float, y0: float, x1: float, y1: float, res: int = 8) -> int:
     """Upper-bound PROBE count of h3_cover_bbox without running it —
     bbox_query_indexed falls back to a plain scan for huge boxes."""
-    edge = _h3core.h3_edge_deg(res)
-    step = 0.55 * edge  # keep in sync with h3_cover_bbox's step
-    rows = int(math.ceil((min(y1, 90.0) - max(y0, -90.0) + 5 * edge) / step)) + 2
-    cols = int(math.ceil((x1 - x0 + 5 * edge) / step)) + 2
+    lon0, lon1, lat0, lat1, step = _h3_cover_window(x0, y0, x1, y1, res)
+    rows = int(math.ceil((lat1 - lat0) / step)) + 2
+    cols = int(math.ceil((lon1 - lon0) / step)) + 2
     return max(rows, 0) * max(cols, 0)
 
 

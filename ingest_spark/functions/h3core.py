@@ -811,7 +811,7 @@ def _pent_rotate_cw(digits):
     return out
 
 
-def _pent_face_ijk(c, res, bc, digits, frames=None):
+def _pent_face_ijk(c, res, bc, digits):
     """Exact inverse for PENTAGON base-cell descendants under THIS
     repo's fitted digit convention (see `_PENTAGON_FIT`): rather than
     recalling uber/h3's pentLeading4 overage fix — which is pinned to
@@ -826,9 +826,7 @@ def _pent_face_ijk(c, res, bc, digits, frames=None):
     points of the cell. ≤ 5 faces × 2 digit variants, pentagon base
     cells only (12 of 122)."""
     best = None
-    if frames is None:
-        frames = _pent_face_positions(c, res, bc, digits)
-    for _r2, f, pos in frames:
+    for _r2, f, pos in _pent_face_positions(c, res, bc, digits):
         if best is None or _r2 < best[0]:
             best = (_r2, f, pos)
     if best is None:
@@ -842,9 +840,7 @@ def _pent_face_positions(c, res, bc, digits):
     """All (hex2d_radius², face, ijk) frames in which a pentagon
     descendant's position round-trips — one per member face whose
     sector the cell touches (see `_pent_face_ijk` for the inversion
-    scheme). Boundary construction consumes every valid frame.
-    Bulk callers use `_pent_positions_batch` (one classification call
-    for many cells) instead."""
+    scheme). Boundary construction consumes every valid frame."""
     members = [
         (f, ijk) for (f, ijk), (cid, _r) in _FIJK_TO_CELL.items() if cid == bc
     ]
@@ -889,7 +885,7 @@ def _pent_face_positions(c, res, bc, digits):
     return list(best.values())
 
 
-def _h3_to_face_ijk(c: int, _pent_frames=None):
+def _h3_to_face_ijk(c: int):
     """h3Index.c `_h3ToFaceIjk` (scalar, exact): cell → canonical
     (face, ijk) at the cell's own resolution. Hexagon base cells use
     the published overage re-anchor with the DERIVED face-neighbor
@@ -900,7 +896,7 @@ def _h3_to_face_ijk(c: int, _pent_frames=None):
     bc = (c >> 45) & 0x7F
     digits = [(c >> (3 * (15 - r))) & 7 for r in range(1, res + 1)]
     if _IS_PENT[bc]:
-        return _pent_face_ijk(c, res, bc, digits, frames=_pent_frames)
+        return _pent_face_ijk(c, res, bc, digits)
     home_face, home_ijk, _ = _BASE_DATA[bc]
     face = home_face
     i, j, k = _descend_digits(home_ijk, digits)
@@ -1084,7 +1080,7 @@ def _change_frame(coords, from_face, to_face, unit_scale):
     )
 
 
-def _cell_boundary_pent(c, res, bc, digits, frames=None):
+def _cell_boundary_pent(c, res, bc, digits):
     """Pentagon cell boundary: per member face, the cell center
     descends in that face's frame (`_pent_face_positions`); the
     substrate vertices that do NOT overage out of the face are exact
@@ -1095,8 +1091,7 @@ def _cell_boundary_pent(c, res, bc, digits, frames=None):
     frame via the faceNeighbors change-of-basis) with that face's
     triangle edge."""
     class3 = res % 2 == 1
-    if frames is None:
-        frames = _pent_face_positions(c, res, bc, digits)
+    frames = _pent_face_positions(c, res, bc, digits)
     vt = _VERT_TABLES[class3]
     raw = []  # (face, substrate coords, lon, lat)
     adj_res = None
@@ -1170,7 +1165,7 @@ def _cell_boundary_pent(c, res, bc, digits, frames=None):
     return out
 
 
-def cell_to_boundary(c: int, _pent_frames=None) -> np.ndarray:
+def cell_to_boundary(c: int) -> np.ndarray:
     """Cell → boundary vertices as an (n, 2) array of (lon°, lat°) in
     ccw order. Hexagon cells: 6 vertices plus one icosa-edge-crossing
     vertex per Class III edge that changes projection face (the
@@ -1184,10 +1179,8 @@ def cell_to_boundary(c: int, _pent_frames=None) -> np.ndarray:
     if _IS_PENT[bc] and all(d == 0 for d in digits):
         # an actual pentagon CELL (the all-zero digit path under a
         # pentagon base cell); other descendants are ordinary hexagons
-        return np.array(
-            _cell_boundary_pent(c, res, bc, digits, frames=_pent_frames)
-        )
-    face, ijk, _ = _h3_to_face_ijk(c, _pent_frames=_pent_frames)
+        return np.array(_cell_boundary_pent(c, res, bc, digits))
+    face, ijk, _ = _h3_to_face_ijk(c)
     return np.array(_cell_boundary_hex(c, face, ijk, res))
 
 
@@ -1264,139 +1257,6 @@ def grid_disk(c: int, k: int) -> "dict[int, int]":
     return dist
 
 
-def grid_disk_batch(cids, k: int):
-    """Bulk disk: for an int64 array of cells, return
-    (origin_idx, cell, ring) arrays — the Spark-side kernel for
-    ring-expansion joins on H3-spec ids. BFS is ring-synchronized
-    across the WHOLE batch over `_neighbors_bulk`: each ring is a few
-    masked numpy passes for the hexagon-base-cell bulk (plus one
-    batched probe classification for pentagon-adjacent rows), and
-    (origin, cell) pair dedup is fully vectorized over packed int64
-    keys (round-5 judge item: the per-pair Python loop + tuple-set was
-    the residual hot path at billions of cells).
-
-    Pair-dedup correctness without a full seen-set: grid distance is
-    the shortest-path metric of the adjacency graph, so a neighbor of
-    a frontier cell at distance ring-1 sits at distance ring-2,
-    ring-1, or ring — anti-joining candidates against just the
-    previous TWO rings' key sets leaves exactly the new ring.
-
-    Key packing: at resolution r the varying bits of a cell id are the
-    7-bit base cell plus 3·r digit bits (the low 3·(15-r) bits are
-    all-ones padding, the top 12 bits constant) — so
-    ``origin << (7+3r) | payload`` is collision-free while
-    log2(n)+7+3r ≤ 63. Mixed resolutions or an overflowing batch fall
-    back to the loop path (`_grid_disk_batch_loop`), which is also the
-    oracle the packed path is property-tested against."""
-    cids = np.asarray(cids, dtype=np.int64)
-    n = len(cids)
-    if n == 0:
-        return (np.empty(0, np.int64),) * 3
-    res_arr = (cids >> np.int64(52)) & np.int64(0xF)
-    res = int(res_arr[0])
-    payload_bits = 7 + 3 * res
-    if not bool((res_arr == res).all()) or (
-        payload_bits + max(1, (n - 1).bit_length()) > 63
-    ):
-        return _grid_disk_batch_loop(cids, k)
-    shift = np.int64(3 * (15 - res))
-    pmask = np.int64((1 << 52) - 1)
-    pbits = np.int64(payload_bits)
-
-    def _pack(o, c):
-        return (o << pbits) | ((c & pmask) >> shift)
-
-    all_o = [np.arange(n, dtype=np.int64)]
-    all_c = [cids.copy()]
-    all_r = [np.zeros(n, dtype=np.int64)]
-    front_o = all_o[0]
-    front_c = cids.copy()
-    prev_keys = np.unique(_pack(front_o, front_c))   # ring-0 keys
-    prev2_keys = np.empty(0, dtype=np.int64)
-    for ring in range(1, k + 1):
-        # expand the unique frontier CELLS once, then map back to
-        # (origin, cell) pairs — different origins often share cells
-        uniq, inv = np.unique(front_c, return_inverse=True)
-        ui, un = _neighbors_bulk(uniq)
-        order = np.argsort(ui, kind="stable")
-        un_s = un[order]
-        cnt = np.bincount(ui[order], minlength=len(uniq))
-        starts = np.concatenate(([0], np.cumsum(cnt)[:-1]))
-        cnt_f = cnt[inv]
-        total = int(cnt_f.sum())
-        if total == 0:
-            break
-        # gather each frontier row's neighbor slice without a loop
-        rep_o = np.repeat(front_o, cnt_f)
-        csum = np.cumsum(cnt_f)
-        within = np.arange(total, dtype=np.int64) - np.repeat(
-            csum - cnt_f, cnt_f
-        )
-        nb = un_s[np.repeat(starts[inv], cnt_f) + within]
-        keys = _pack(rep_o, nb)
-        uk, first = np.unique(keys, return_index=True)
-        fresh = ~np.isin(uk, prev_keys, assume_unique=True)
-        if len(prev2_keys):
-            fresh &= ~np.isin(uk, prev2_keys, assume_unique=True)
-        sel = first[fresh]
-        if len(sel) == 0:
-            break
-        front_o = rep_o[sel]
-        front_c = nb[sel]
-        prev2_keys = prev_keys
-        prev_keys = uk[fresh]
-        all_o.append(front_o)
-        all_c.append(front_c)
-        all_r.append(np.full(len(sel), ring, dtype=np.int64))
-    return (
-        np.concatenate(all_o),
-        np.concatenate(all_c),
-        np.concatenate(all_r),
-    )
-
-
-def _grid_disk_batch_loop(cids, k: int):
-    """Reference (and mixed-res / overflow fallback) pair-set BFS —
-    the original Python-loop assembly the packed path is tested
-    against bit-for-bit."""
-    cids = np.asarray(cids, dtype=np.int64)
-    n = len(cids)
-    if n == 0:
-        return (np.empty(0, np.int64),) * 3
-    all_o = [np.arange(n, dtype=np.int64)]
-    all_c = [cids.copy()]
-    all_r = [np.zeros(n, dtype=np.int64)]
-    seen = set(zip(range(n), cids.tolist()))
-    front_o = np.arange(n, dtype=np.int64)
-    front_c = cids.copy()
-    for ring in range(1, k + 1):
-        uniq, inv = np.unique(front_c, return_inverse=True)
-        ui, un = _neighbors_bulk(uniq)
-        per_cell: dict = {}
-        for a, b in zip(ui.tolist(), un.tolist()):
-            per_cell.setdefault(a, []).append(b)
-        next_o, next_c = [], []
-        for fo, ci in zip(front_o.tolist(), inv.tolist()):
-            for nb in per_cell.get(ci, ()):
-                kpair = (fo, nb)
-                if kpair not in seen:
-                    seen.add(kpair)
-                    next_o.append(fo)
-                    next_c.append(nb)
-        if not next_o:
-            break
-        front_o = np.array(next_o, dtype=np.int64)
-        front_c = np.array(next_c, dtype=np.int64)
-        all_o.append(front_o)
-        all_c.append(front_c)
-        all_r.append(np.full(len(front_o), ring, dtype=np.int64))
-    return (
-        np.concatenate(all_o),
-        np.concatenate(all_c),
-        np.concatenate(all_r),
-    )
-
-
 # --------------------------------------------------- small public API
 
 def string_to_cell(s) -> np.ndarray:
@@ -1469,7 +1329,7 @@ def cell_area_km2(cid) -> np.ndarray:
 
 
 # ------------------------------------------- digit-space neighbor walk
-# The bulk-scale path for `_neighbors`/`grid_disk`: the published
+# The fast path for `_neighbors`/`grid_disk`: the published
 # h3NeighborRotations digit arithmetic (algos.c), with every table
 # DERIVED rather than recalled:
 # - digit-transition tables (`NEW_DIGIT`/`NEW_ADJUSTMENT` per class):
@@ -1594,230 +1454,4 @@ def _neighbor_fast(c: int, dirc: int):
     for rr in range(res):
         out |= digits[rr] << (3 * (15 - rr - 1))
     out |= (1 << (3 * (15 - res))) - 1
-    return out
-
-
-def _neighbors_bulk(cells: np.ndarray):
-    """Vectorized `_neighbor_fast` over an int64 cell array: returns
-    (origin_index, neighbor_cell) arrays covering every neighbor of
-    every input cell. Hexagon-base-cell rows whose six steps stay
-    clear of pentagon base cells run as ~15 masked numpy passes per
-    direction regardless of batch size; the remaining rows (pentagon
-    descendants and their immediate outside neighbors — ~12/122 of the
-    id space) take the probe path with its `latlng_to_cell` probes
-    BATCHED into one call (the per-cell boundary walk remains Python,
-    ~150 µs/cell). This is the bulk kernel behind `grid_disk_batch`."""
-    cells = np.asarray(cells, dtype=np.int64)
-    n = len(cells)
-    res = (cells >> np.int64(52)) & np.int64(0xF)
-    bc = (cells >> np.int64(45)) & np.int64(0x7F)
-    # only the digit columns up to the batch's max res are real; the
-    # low 3·(15-maxres) bits are padding on every row and get OR-ed
-    # back as a constant when ids are assembled (keeping 15 columns
-    # doubled the walk's memory traffic for nothing at typical res)
-    maxres = int(res.max()) if n else 0
-    digits0 = np.stack(
-        [(cells >> np.int64(3 * (15 - r))) & np.int64(7)
-         for r in range(1, maxres + 1)], axis=1
-    ) if maxres else np.zeros((n, 0), dtype=np.int64)
-    pad_mask = np.int64((1 << (3 * (15 - maxres))) - 1)
-    # Slow-routing is NARROW (round-6): the published neighbor
-    # semantics (uber/h3 h3NeighborRotations) applies pentagon
-    # corrections only when (a) the origin IS a pentagon cell (deleted
-    # K direction), (b) the walk exits the base cell and either side
-    # is a pentagon base cell (pentagonRotations / cw-offset fixes —
-    # and our derived _BCN/_BCR rows are hexagon-only), or (c) the
-    # walk stays in a pentagon base cell but the result's leading
-    # nonzero digit is K (deleted-subsequence crossing). Every other
-    # row — including the bulk of pentagon-BASE-CELL interiors, ~10%
-    # of the id space that round 5 blanket-routed to ~150 µs/cell
-    # probes — is plain hexagon digit arithmetic and stays on the
-    # masked-numpy fast path. Cases (a)-(c) route to the probe path,
-    # which is exact by construction and remains the tested oracle.
-    if maxres:
-        has_nz = (digits0 != 0).any(axis=1)
-        firstnz = np.argmax(digits0 != 0, axis=1)
-    else:
-        has_nz = np.zeros(n, dtype=bool)
-        firstnz = np.zeros(n, dtype=np.int64)
-    slow = _IS_PENT[bc] & (~has_nz | (firstnz >= res))   # pentagon cells
-    nd_iii, na_iii = _DIGIT_TRANS[False]
-    nd_ii, na_ii = _DIGIT_TRANS[True]
-    rot_ext = np.concatenate([_ROT_CCW, [7]])
-    idx = np.nonzero(~slow)[0]
-    fast_results = []  # (idx array, ids array) per dir
-    for dirc in range(1, 7):
-        digits = digits0[idx]  # fancy index already copies
-        d = np.full(len(idx), dirc, dtype=np.int64)
-        r = res[idx].copy()
-        new_bc = bc[idx].copy()
-        rots = np.zeros(len(idx), dtype=np.int64)
-        exited_mask = np.zeros(len(idx), dtype=bool)
-        # res-0 rows never enter the digit walk: the step is a pure
-        # base-cell-table lookup (round-6 fix — they previously fell
-        # through and returned the origin id itself)
-        zero = np.nonzero(r < 1)[0]
-        if len(zero):
-            new_bc[zero] = _BCN[bc[idx][zero], d[zero]]
-            rots[zero] = _BCR[bc[idx][zero], d[zero]]
-            exited_mask[zero] = True
-        active = r >= 1
-        while active.any():
-            rows = np.nonzero(active)[0]
-            rr = r[rows]
-            cls2 = (rr % 2) == 0
-            old = digits[rows, rr - 1]
-            nd_val = np.where(cls2, nd_ii[old, d[rows]], nd_iii[old, d[rows]])
-            adj = np.where(cls2, na_ii[old, d[rows]], na_iii[old, d[rows]])
-            digits[rows, rr - 1] = nd_val
-            done = adj == 0
-            active[rows[done]] = False
-            cont = rows[~done]
-            d[cont] = adj[~done]
-            r[cont] -= 1
-            exited = cont[r[cont] < 1]
-            if len(exited):
-                new_bc[exited] = _BCN[bc[idx][exited], d[exited]]
-                rots[exited] = _BCR[bc[idx][exited], d[exited]]
-                exited_mask[exited] = True
-                active[exited] = False
-        for t in range(1, 6):
-            m = rots >= t
-            if m.any():
-                digits[m] = rot_ext[digits[m]]
-        ids = (
-            np.int64(1 << 59) | (res[idx] << np.int64(52))
-            | (new_bc << np.int64(45)) | pad_mask
-        )
-        for rr2 in range(maxres):
-            ids |= digits[:, rr2] << np.int64(3 * (15 - rr2 - 1))
-        pent_src = _IS_PENT[bc[idx]]
-        pent_tgt = _IS_PENT[new_bc]
-        bad = exited_mask & (pent_src | pent_tgt)
-        same_pent = (~exited_mask) & pent_tgt
-        if same_pent.any():
-            sp = np.nonzero(same_pent)[0]
-            dd = digits[sp]
-            fnz = np.argmax(dd != 0, axis=1)
-            lead = dd[np.arange(len(sp)), fnz]
-            bad_k = (fnz < res[idx][sp]) & (lead == 1)
-            bad[sp[bad_k]] = True
-        slow[idx[bad]] = True  # route those ORIGINS to probes
-        fast_results.append((idx, ids))
-    out_idx = []
-    out_nbr = []
-    keep = ~slow[idx]  # rows that stayed pentagon-free in ALL dirs
-    for idx_d, ids_d in fast_results:
-        out_idx.append(idx_d[keep])
-        out_nbr.append(ids_d[keep])
-    # probe path for the slow rows, latlng probes batched across cells
-    slow_rows = np.nonzero(slow)[0]
-    if len(slow_rows):
-        pent_cells = [int(cells[i]) for i in slow_rows.tolist()
-                      if _IS_PENT[(int(cells[i]) >> 45) & 0x7F]]
-        frames_by_cell = _pent_positions_batch(pent_cells)
-        probe_lon, probe_lat, probe_origin = [], [], []
-        for i in slow_rows.tolist():
-            c = int(cells[i])
-            frames = frames_by_cell.get(c)
-            face, ijk, rr = _h3_to_face_ijk(c, _pent_frames=frames)
-            b = cell_to_boundary(c, _pent_frames=frames)
-            x, y = _ijk_to_hex2d(*ijk)
-            lat0, lng0 = _hex2d_to_geo(face, x, y, rr)
-            ctr = np.array(_geo_to_xyz(lat0, lng0))
-            verts = np.array([
-                _geo_to_xyz(math.radians(la), math.radians(lo))
-                for lo, la in b
-            ])
-            for vi in range(len(b)):
-                mid = verts[vi] + verts[(vi + 1) % len(b)]
-                mid /= np.linalg.norm(mid)
-                pp = mid + 0.15 * (mid - ctr)
-                pp /= np.linalg.norm(pp)
-                probe_lat.append(
-                    math.degrees(math.asin(max(-1.0, min(1.0, pp[2]))))
-                )
-                probe_lon.append(math.degrees(math.atan2(pp[1], pp[0])))
-                probe_origin.append(i)
-        porig = np.array(probe_origin, dtype=np.int64)
-        pcell = latlng_to_cell(
-            np.array(probe_lon), np.clip(np.array(probe_lat), -90, 90),
-            int(res[slow_rows[0]]),
-        ) if (res[slow_rows] == res[slow_rows[0]]).all() else np.concatenate([
-            latlng_to_cell(
-                np.array(probe_lon)[porig == i],
-                np.clip(np.array(probe_lat)[porig == i], -90, 90),
-                int(res[i]),
-            ) for i in slow_rows.tolist()
-        ])
-        # drop self-hits and dedup (origin, cell) pairs — small arrays
-        m = pcell != cells[porig]
-        porig, pcell = porig[m], pcell[m]
-        order = np.lexsort((pcell, porig))
-        porig, pcell = porig[order], pcell[order]
-        first = np.ones(len(porig), dtype=bool)
-        first[1:] = (porig[1:] != porig[:-1]) | (pcell[1:] != pcell[:-1])
-        out_idx.append(porig[first])
-        out_nbr.append(pcell[first])
-    oi = np.concatenate(out_idx) if out_idx else np.empty(0, np.int64)
-    on = np.concatenate(out_nbr) if out_nbr else np.empty(0, np.int64)
-    return oi, on
-
-
-def _pent_positions_batch(cell_list):
-    """`_pent_face_positions` for MANY pentagon-base-cell ids at once:
-    all candidate descents are generated lattice-side, verified with a
-    single `latlng_to_cell` call (per-cell single-point calls carry
-    ~100 µs of vectorized-kernel overhead each — the round-5 bulk
-    profile), and grouped back per cell."""
-    rows = []  # (cell, f, pos, r2, lon, lat)
-    metas = []
-    for c in cell_list:
-        c = int(c)
-        res = (c >> 52) & 0xF
-        bc = (c >> 45) & 0x7F
-        digits = [(c >> (3 * (15 - r))) & 7 for r in range(1, res + 1)]
-        members = [
-            (f, ijk) for (f, ijk), (cid, _r) in _FIJK_TO_CELL.items()
-            if cid == bc
-        ]
-        for f, ijk_f in sorted(members):
-            m = int(_BC_ROT[f, ijk_f[0], ijk_f[1], ijk_f[2]])
-            base = list(digits)
-            for _ in range(m):
-                base = _pent_rotate_cw(base)
-            cands = []
-            if next((d for d in base if d != 0), 0) != _K:
-                cands.append(base)
-            is_cw = f in _CW_OFFSET[bc]
-            table = _ROT_CCW if is_cw else _ROT_CW
-            pre = [int(table[d]) for d in base]
-            if next((d for d in pre if d != 0), 0) == _K:
-                cands.append(pre)
-            for cand in cands:
-                pos = _descend_digits(ijk_f, cand)
-                x, y = _ijk_to_hex2d(*pos)
-                lat, lng = _hex2d_to_geo(f, x, y, res)
-                rows.append((c, f, pos, x * x + y * y,
-                             math.degrees(lng), math.degrees(lat)))
-                metas.append(res)
-    out: dict = {int(c): [] for c in cell_list}
-    if not rows:
-        return out
-    # group the one batched verification by res (mixed-res safe)
-    lons = np.array([r[4] for r in rows])
-    lats = np.array([r[5] for r in rows])
-    ress = np.array(metas)
-    back = np.empty(len(rows), dtype=np.int64)
-    for rv in np.unique(ress):
-        m = ress == rv
-        back[m] = latlng_to_cell(lons[m], lats[m], int(rv))
-    for (c, f, pos, r2, _lo, _la), b in zip(rows, back.tolist()):
-        if int(b) == c:
-            cur = out[c]
-            repl = next((i for i, e in enumerate(cur) if e[1] == f), None)
-            if repl is None:
-                cur.append((r2, f, pos))
-            elif r2 < cur[repl][0]:
-                cur[repl] = (r2, f, pos)
     return out

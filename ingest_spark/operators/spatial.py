@@ -20,17 +20,22 @@ tests/ingest.rs:29-34) — to the north_rule's operator set. Design:
   even-odd ray casting in a vectorized numpy kernel. At 100 TB the
   fact side streams; the dim side is a broadcast hash table — no
   shuffle of the big side.
-- kNN: a provably-terminal TWO-PASS plan, no driver loop (see
-  knn_ring_expansion below). Pass 1 seeds a per-query ring radius from
-  the query cell's local point density, gathers k_ring(cell, R0)
-  candidates (dimension-side explode — the big point table shuffles
-  once on cell id), and takes each query's kth-candidate distance.
+- kNN: one plan, ``knn_join`` (``knn_join_h3`` is the same function),
+  a provably-terminal TWO-PASS plan with no driver loop. Its ring join
+  keys on the planar hex grid it computes from (lon, lat), never on a
+  stored cell column, so it is exact at any latitude. Pass 1 seeds a
+  per-query ring radius from the query cell's local point density,
+  gathers k_ring(cell, R0) candidates (dimension-side explode — the
+  big point table shuffles once on cell id), and takes each query's
+  kth-candidate distance.
   Pass 2 re-gathers with the ring radius R2 implied by that kth
   distance via the geometric guarantee (any point outside rings 0..R
   is at distance > edge·(1.5·(R+1) − 2)); because pass 1's kth over a
   candidate SUBSET is ≥ the true kth, rings 0..R2 provably contain the
-  true top-k — no recheck round, no stragglers. EXACT kNN, verified
-  against a cross-join oracle.
+  true top-k — no recheck round, no stragglers. Queries with < k
+  pass-1 candidates, or whose pass-2 ring would pass
+  ``cfg.knn_max_ring``, take an exact broadcast brute-force pass.
+  EXACT kNN, verified against the cross-join oracle knn_brute_force.
 """
 
 from __future__ import annotations
@@ -48,13 +53,6 @@ from ..functions import cells as cell_fn
 
 
 # ------------------------------------------------------------ indexing
-
-def _hex_udf(res: int):
-    @F.pandas_udf(LongType())
-    def _u(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(cell_fn.hex_cell(lon.to_numpy(), lat.to_numpy(), res))
-    return _u
-
 
 def hex_cell_col(lon, lat, res: int):
     """JVM-side twin of functions.cells.hex_cell_id — the hex assignment
@@ -343,12 +341,6 @@ def make_polygons_df(spark, polys: list[dict]) -> DataFrame:
 
 # ------------------------------------------------------------------ kNN
 
-# knn_join_h3: the pass-1 disk radius, and the largest pass-2 cover
-# (cells) before a query falls back to the brute-force pass
-_KNN_H3_SEED_RING = 1
-_KNN_H3_MAX_COVER = 20_000
-
-
 def _knn_points(points: DataFrame, point_id: str) -> DataFrame:
     """The point side every kNN plan reads: (_pid, _px, _py)."""
     return points.select(
@@ -574,6 +566,11 @@ def knn_join(
     return out
 
 
+# The name tables keyed by the H3 ``hex_cell`` are queried under. The
+# ring plan reads only (lon, lat), so it needs no plan of its own.
+knn_join_h3 = knn_join
+
+
 def knn_brute_force(
     points: DataFrame,
     queries: DataFrame,
@@ -616,148 +613,3 @@ def bbox_query_indexed(
     return bbox_query(
         features.where(F.col(cell_col).isin(cover)), x0, y0, x1, y1
     )
-
-
-def knn_join_h3(
-    points: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    res: int = 4,
-    point_id: str = "id",
-    query_id: str = "qid",
-    stats_out: dict | None = None,
-) -> DataFrame:
-    """Exact kNN with the table keyed by H3-SPEC cell ids — the same
-    storage contract a reference-indexed table carries (the spatial
-    key IS the contract, src/lib.rs:24-27), so a user who indexed with
-    `hex_cell` can kNN directly on those ids without
-    re-keying onto the planar ring grid. Same output contract as
-    knn_join: (qid, id, dist, rank), degree-Euclidean metric,
-    (dist, id) tiebreak.
-
-    Exactness scheme (the real grid has no clean planar ring-distance
-    guarantee — cells vary ~2x in size): pass 1 gathers candidates
-    from `h3core.grid_disk(qcell, _KNN_H3_SEED_RING)` — an equi-join on cell
-    id, each query touching ≤ 1+3R(R+1) cells. Its per-query kth
-    distance r upper-bounds the true kth (subset top-k ≥ global
-    top-k); pass 2 re-gathers from the GUARANTEED-HIT cover
-    (`h3_cover_bbox`) of the degree bbox [q ± r], which contains every
-    cell owning a point within distance r, so the pass-2 top-k is
-    provably exact. Queries with < k pass-1 candidates, or whose cover
-    would exceed ``_KNN_H3_MAX_COVER`` cells, fall back to an exact broadcast
-    brute-force pass over just those queries.
-
-    Scale shape: the point table shuffles on cell id once per pass;
-    disk/cover kernels run per DISTINCT query cell (memoized per Arrow
-    batch); no driver loop — the two passes plus one tiny routing
-    aggregate are the whole job graph.
-
-    Fallback visibility (round-6 judge item): the brute pass is exact
-    but broadcast-quadratic, so a skewed dataset silently degrading to
-    it would be a scale hazard. The routing counts are surfaced two
-    ways: ``stats_out`` (if a dict is passed) receives
-    ``{"n_queries", "n_pass2", "n_brute"}``, and the result carries a
-    named ``observe("knn_h3_fallback", ...)`` whose ``n_brute_rows``
-    aggregate any QueryExecutionListener / metrics pipeline can read
-    post-action.
-    """
-    from ..functions import h3core
-
-    pts = _knn_points(points, point_id).withColumn(
-        "_pcell", _hex_udf(res)(F.col("_px"), F.col("_py"))
-    ).persist()
-    qs = _knn_queries(queries, query_id).withColumn(
-        "_qcell", _hex_udf(res)(F.col("_qx"), F.col("_qy"))
-    )
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _disk(cell: pd.Series) -> pd.Series:
-        # bulk ring-synchronized BFS over the whole Arrow batch's
-        # DISTINCT cells (h3core.grid_disk_batch): numpy digit-walk
-        # passes per ring, not per-cell Python
-        uniq = np.unique(cell.to_numpy().astype(np.int64))
-        oi, oc, _orr = h3core.grid_disk_batch(uniq, _KNN_H3_SEED_RING)
-        per: dict = {int(uniq[i]): [] for i in range(len(uniq))}
-        for i, c2 in zip(oi.tolist(), oc.tolist()):
-            per[int(uniq[i])].append(c2)
-        return pd.Series([per[int(c)] for c in cell])
-
-    # explode_outer, not explode: for an inner generator Catalyst infers
-    # a size(_cells) > 0 filter, which, once the projections collapse,
-    # calls the UDF a second time in a second Python node. The null row
-    # explode_outer keeps for an empty list drops at the inner join.
-    exp1 = qs.withColumn("_cells", _disk("_qcell")).select(
-        "_qid", "_qx", "_qy", F.explode_outer("_cells").alias("_pcell")
-    )
-    topk1 = _topk(exp1.join(pts, "_pcell", "inner"), k).localCheckpoint(eager=True)
-    stat1 = topk1.groupBy("_qid").agg(
-        F.count("*").alias("_n1"), F.max("dist").alias("_kth1")
-    )
-    st = qs.join(stat1, "_qid", "left").withColumn(
-        "_n1", F.coalesce("_n1", F.lit(0))
-    )
-
-    # cover budget precheck is a pure function of (qy, r, res) — cheap
-    # Catalyst-side estimate mirroring h3_cover_size's grid dimensions
-    edge = h3core.h3_edge_deg(res)
-    grid_w = (F.lit(2.0) * F.col("_kth1") + F.lit(5.0 * edge)) / F.lit(0.55 * edge)
-    cover_est = grid_w * grid_w
-    is_pass2 = (F.col("_n1") == k) & (cover_est <= F.lit(float(_KNN_H3_MAX_COVER)))
-    is_brute = ~is_pass2
-
-    tri = st.agg(
-        F.sum(F.when(is_pass2, 1).otherwise(0)).alias("np2"),
-        F.sum(F.when(is_brute, 1).otherwise(0)).alias("nbr"),
-        F.count(F.lit(1)).alias("nq"),
-    ).first()
-    n_p2, n_br, n_q = (tri[c] or 0 for c in ("np2", "nbr", "nq"))
-    if stats_out is not None:
-        stats_out.update(
-            {"n_queries": int(n_q), "n_pass2": int(n_p2),
-             "n_brute": int(n_br)}
-        )
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _cover(qx: pd.Series, qy: pd.Series, r: pd.Series) -> pd.Series:
-        out = []
-        for x, y, rr in zip(qx, qy, r):
-            out.append(
-                cell_fn.h3_cover_bbox(
-                    float(x) - float(rr), float(y) - float(rr),
-                    float(x) + float(rr), float(y) + float(rr), res
-                )
-            )
-        return pd.Series(out)
-
-    parts: list[DataFrame] = []
-    if n_p2 > 0:
-        p2 = st.where(is_pass2).withColumn(
-            "_cells", _cover("_qx", "_qy", "_kth1")
-        ).select("_qid", "_qx", "_qy", F.explode_outer("_cells").alias("_pcell"))
-        parts.append(
-            _topk(p2.join(pts, "_pcell", "inner"), k).select(
-                "_qid", "_pid", "dist", "rank",
-                F.lit(False).alias("_is_brute"),
-            )
-        )
-    if n_br > 0:
-        brute_q = st.where(is_brute).select("_qid", "_qx", "_qy")
-        parts.append(
-            _topk(brute_q.crossJoin(pts.drop("_pcell")), k).select(
-                "_qid", "_pid", "dist", "rank",
-                F.lit(True).alias("_is_brute"),
-            )
-        )
-    result = parts[0] if parts else topk1.select(
-        "_qid", "_pid", "dist", "rank", F.lit(False).alias("_is_brute")
-    )
-    for p in parts[1:]:
-        result = result.unionByName(p)
-    result = result.observe(
-        "knn_h3_fallback",
-        F.sum(F.when(F.col("_is_brute"), 1).otherwise(0)).alias("n_brute_rows"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-    out = _knn_result(result, query_id, point_id).localCheckpoint(eager=True)
-    pts.unpersist()
-    return out

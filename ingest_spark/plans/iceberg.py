@@ -74,6 +74,16 @@ from ingest_spark.plans.checkpoint import SnapshotBackend
 FORMAT_VERSION = 2
 MAIN_BRANCH = "main"
 
+
+def _remove_data_file(fp: str) -> None:
+    """Delete a Spark-written data file and the ``.{name}.crc``
+    checksum sidecar Hadoop's local filesystem writes next to it."""
+    d, name = os.path.split(fp)
+    for p in (fp, os.path.join(d, f".{name}.crc")):
+        if os.path.exists(p):
+            os.remove(p)
+
+
 # ---------------------------------------------- schema conversion
 
 _PRIMITIVES = {
@@ -457,7 +467,7 @@ class IcebergMetadataBackend(SnapshotBackend):
                 # empty task output — real Iceberg writers never
                 # commit 0-row data files (and they carry no bounds,
                 # which would defeat pruning)
-                os.remove(p)
+                _remove_data_file(p)
                 continue
             files.append({
                 "file_path": os.path.abspath(p),
@@ -1023,7 +1033,10 @@ class IcebergMetadataBackend(SnapshotBackend):
         version are the now-unreachable data/manifest files deleted —
         a crash or lost race between the two steps leaves only
         harmless orphans, never current metadata pointing at deleted
-        files."""
+        files. Metadata versions older than the one before the trimmed
+        one are deleted with them: every snapshot is in the newest
+        file, and a reader that listed just before the publish still
+        finds the previous one."""
         for _attempt in range(self.max_retries):
             md = self.current_metadata(path)
             if md is None:
@@ -1046,8 +1059,13 @@ class IcebergMetadataBackend(SnapshotBackend):
                 e for e in md2["snapshot-log"]
                 if e["snapshot-id"] in keep_ids
             ]
+            md2["metadata-log"] = [{
+                "timestamp-ms": int(time.time() * 1000),
+                "metadata-file": os.path.join(
+                    self._meta_dir(path), f"v{md['_version']}.metadata.json"),
+            }]
             try:
-                self._publish(path, md2)
+                version = self._publish(path, md2)
             except CommitConflict:
                 continue  # recompute victims against fresh metadata
             # metadata is current — GC the unreachable files
@@ -1057,12 +1075,16 @@ class IcebergMetadataBackend(SnapshotBackend):
                     _, entries = avro.read_ocf(m["manifest_path"])
                     for e in entries:
                         fp = e["data_file"]["file_path"]
-                        if fp not in keep_files and os.path.exists(fp):
-                            os.remove(fp)
+                        if fp not in keep_files:
+                            _remove_data_file(fp)
                     if os.path.exists(m["manifest_path"]):
                         os.remove(m["manifest_path"])
                 if os.path.exists(s["manifest-list"]):
                     os.remove(s["manifest-list"])
+            for v in self._versions(path):
+                if v < version - 1:
+                    os.remove(os.path.join(
+                        self._meta_dir(path), f"v{v}.metadata.json"))
             # prune now-empty staging dirs
             for d in glob.glob(os.path.join(path, "data", "*")):
                 if os.path.isdir(d) and not any(

@@ -187,3 +187,63 @@ class TestPolyBboxAntimeridianPole:
         assert b[:, 0].max() - b[:, 0].min() > 180
         assert _poly_intersects_bbox(b, 100.0, 89.0, 110.0, 90.0)
         assert not _poly_intersects_bbox(b, 100.0, 60.0, 110.0, 61.0)
+
+
+# a box near the pole whose points fall in 2 res-8 cells; a lon pad of
+# 2.5 edges in degrees reaches only one of them
+POLAR_BOX = (-135.9457, 89.4320, -135.9414, 89.4363)
+
+
+class TestH3CoverNearPoles:
+    """Toward a pole an H3 cell spans ~1/cos(lat) times more degrees of
+    longitude than of latitude, so the sampled cover pads longitude by
+    that factor. The oracle is the set of cells owning random points of
+    each box."""
+
+    def test_polar_boxes_hold_every_owning_cell(self, monkeypatch):
+        from ingest_spark.functions import h3core
+        probes = []
+        encode = C.hex_cell
+
+        def counting(lon, lat, res):
+            probes.append(np.size(lon))
+            return encode(lon, lat, res)
+
+        monkeypatch.setattr(C, "hex_cell", counting)
+        rng = np.random.default_rng(3)
+        missed = []
+        for res in (4, 6, 8):
+            e = h3core.h3_edge_deg(res)
+            boxes = [POLAR_BOX]
+            for _ in range(150):
+                cx = rng.uniform(-180, 180)
+                cy = rng.choice([-1, 1]) * rng.uniform(80, 89.9)
+                w, hh = rng.uniform(0.05, 3, 2) * e
+                boxes.append((cx - w, max(cy - hh, -90), cx + w, min(cy + hh, 90)))
+            for box in boxes:
+                probes.clear()
+                cover = set(C.h3_cover_bbox(*box, res))
+                assert C.h3_cover_size(*box, res) >= sum(probes), (box, res)
+                lon = rng.uniform(box[0], box[2], 2000)
+                lat = rng.uniform(box[1], box[3], 2000)
+                owning = set(h3core.latlng_to_cell(lon, lat, res).tolist())
+                if not owning <= cover:
+                    missed.append((res, box, len(owning - cover)))
+        assert missed == []
+
+    def test_indexed_bbox_query_equals_plain_near_pole(self, spark):
+        from ingest_spark.operators.spatial import (
+            bbox_query, bbox_query_indexed, with_cells)
+        rng = np.random.default_rng(0)
+        x0, y0, x1, y1 = POLAR_BOX
+        lon = rng.uniform(x0, x1, 300)
+        lat = rng.uniform(y0, y1, 300)
+        feats = with_cells(spark.createDataFrame(
+            [(i, float(a), float(b), float(a), float(b))
+             for i, (a, b) in enumerate(zip(lon, lat))],
+            "id long, minx double, miny double, maxx double, maxy double",
+        ))
+        plain = {r.id for r in bbox_query(feats, *POLAR_BOX).collect()}
+        indexed = {r.id for r in bbox_query_indexed(feats, *POLAR_BOX).collect()}
+        assert len(plain) == 300
+        assert indexed == plain

@@ -459,82 +459,6 @@ class TestFastNeighborWalk:
                 assert c in h._neighbors(nb)
 
 
-class TestBulkWalkRound6:
-    """Round-6: vectorized grid_disk_batch pair assembly (packed int64
-    keys + two-ring anti-join) against the loop/seen-set reference,
-    the narrowed pentagon slow-routing, and the res-0 bulk fix."""
-
-    def test_packed_disk_equals_loop_reference(self):
-        rng = np.random.default_rng(11)
-        for res in (1, 4, 8):
-            cells = np.unique(h.latlng_to_cell(
-                rng.uniform(-180, 180, 250), rng.uniform(-89, 89, 250), res))
-            for k in (1, 2, 3):
-                a = h.grid_disk_batch(cells, k)
-                b = h._grid_disk_batch_loop(cells, k)
-                assert sorted(zip(*[x.tolist() for x in a])) == \
-                    sorted(zip(*[x.tolist() for x in b])), (res, k)
-
-    def test_packed_disk_equals_loop_pentagon_dense(self):
-        # disks centered on every res-3 pentagon: exercises the
-        # deleted-K fringe and pentagon base-cell crossings
-        lon = np.linspace(-180, 179.5, 300)
-        lat = np.linspace(-89, 89, 150)
-        glon, glat = np.meshgrid(lon, lat)
-        c2 = np.unique(h.latlng_to_cell(glon.ravel(), glat.ravel(), 2))
-        pents = c2[h.is_pentagon(c2)]
-        assert len(pents) == 12
-        mix = np.unique(np.concatenate(
-            [np.array(list(h.grid_disk(int(p), 2)), dtype=np.int64)
-             for p in pents.tolist()]))
-        a = h.grid_disk_batch(mix, 2)
-        b = h._grid_disk_batch_loop(mix, 2)
-        assert sorted(zip(*[x.tolist() for x in a])) == \
-            sorted(zip(*[x.tolist() for x in b]))
-
-    def test_bulk_neighbors_res0_full_enumeration(self):
-        # regression: res-0 rows previously skipped the base-cell step
-        # and returned the origin id itself
-        cells = np.array(sorted(
-            (1 << 59) | (bc << 45) | ((1 << 45) - 1) for bc in range(122)
-        ), dtype=np.int64)
-        ui, un = h._neighbors_bulk(cells)
-        for i, c in enumerate(cells.tolist()):
-            got = set(un[ui == i].tolist())
-            assert got == set(h._neighbors(int(c))), hex(c)
-            assert int(c) not in got
-
-    def test_bulk_neighbors_pentagon_bc_interiors(self):
-        # the narrowed routing keeps pentagon-BASE-CELL interiors on
-        # the fast path; complete res-2 enumeration pins every such
-        # cell (incl. the K-fringe) against the scalar probe oracle
-        lon = np.linspace(-180, 179.5, 500)
-        lat = np.linspace(-89, 89, 240)
-        glon, glat = np.meshgrid(lon, lat)
-        cells = np.unique(h.latlng_to_cell(glon.ravel(), glat.ravel(), 2))
-        assert len(cells) == 5882
-        pent_bc = cells[h._IS_PENT[(cells >> np.int64(45)) & np.int64(0x7F)]]
-        assert len(pent_bc) > 400  # interiors really are in the batch
-        ui, un = h._neighbors_bulk(cells)
-        for i, c in enumerate(cells.tolist()):
-            if not h._IS_PENT[(c >> 45) & 0x7F]:
-                continue
-            assert set(un[ui == i].tolist()) == \
-                set(h._neighbors(int(c))), hex(c)
-
-    def test_bulk_neighbors_mixed_res_batch(self):
-        rng = np.random.default_rng(5)
-        mix = np.concatenate([
-            np.unique(h.latlng_to_cell(
-                rng.uniform(-180, 180, 150),
-                rng.uniform(-80, 80, 150), r))
-            for r in (0, 3, 8)
-        ])
-        ui, un = h._neighbors_bulk(mix)
-        for i, c in enumerate(mix.tolist()):
-            assert set(un[ui == i].tolist()) == set(h._neighbors(int(c)))
-
-
 class TestCanonicalPinning:
     """Round-6: the structural half of jobs/h3_ambiguity_audit.py —
     pentagon frames are pinned to canonical H3 by the deleted-K

@@ -233,6 +233,35 @@ class TestIcebergBackend:
         # expiring below the current snapshot refuses
         assert b.expire_snapshots(path, keep=1) == 0
 
+    def test_expire_bounds_metadata_and_leaves_no_checksum_orphans(
+            self, spark, tmp_path):
+        b = IcebergMetadataBackend()
+        path = str(tmp_path / "tbl")
+        for i in range(5):
+            b.commit(_df(spark, [(i, "a"), (i + 10, "b")]), path)
+        assert b.expire_snapshots(path, keep=1) == 4
+        meta = os.path.join(path, "metadata")
+        versions = sorted(p.name for p in Path(meta).glob("v*.metadata.json"))
+        assert len(versions) <= 2, versions
+        md = b.current_metadata(path)
+        assert all(os.path.exists(e["metadata-file"])
+                   for e in md["metadata-log"])
+        kept = md["current-snapshot-id"]
+        assert {r.id for r in b.read(spark, path).collect()} == {4, 14}
+        assert {r.id for r in b.read_snapshot(spark, path, kept)
+                .collect()} == {4, 14}
+        # every Hadoop checksum sidecar still has its data file
+        orphans = [
+            str(c) for c in Path(path).rglob(".*.crc")
+            if not (c.parent / c.name[1:-len(".crc")]).exists()
+        ]
+        assert orphans == []
+        # the next commit and expiry keep the bound
+        b.commit(_df(spark, [(7, "c")]), path)
+        assert b.expire_snapshots(path, keep=1) == 1
+        assert len(list(Path(meta).glob("v*.metadata.json"))) <= 2
+        assert {r.id for r in b.read(spark, path).collect()} == {7}
+
     def test_empty_table_roundtrip(self, spark, tmp_path):
         b = IcebergMetadataBackend()
         path = str(tmp_path / "tbl")

@@ -118,7 +118,10 @@ def test_python_worker_has_the_gate_from_its_second_task(spark):
 
     one_task = spark.range(1, numPartitions=1).select(probe("id"))
     seen: dict[str, list[tuple[int, ...]]] = {}
-    for _ in range(24):
+    # idle workers left by earlier tests take the probes in turn, so a
+    # pid's third task can come after three probes per idle worker; the
+    # cap is far above the workers one host holds
+    for _ in range(512):
         pid, *report = one_task.first()[0].split()
         seen.setdefault(pid, []).append(tuple(int(v) for v in report))
         if len(seen[pid]) == 3:
