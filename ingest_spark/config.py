@@ -32,7 +32,9 @@ class EngineConfig:
     # tile pyramid
     tile_zoom: int = 12
 
-    # kNN
+    # kNN: no longer read (knn_join routes each query from per-cell
+    # point counts and has no ring cap); kept because the contract's
+    # knn_ring_expansion row passes it
     knn_max_ring: int = 4
 
     # dedup

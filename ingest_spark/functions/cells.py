@@ -16,9 +16,8 @@ scope note): the full icosahedral algorithm implemented from the
 published spec in pure numpy (functions/h3core.py; no `h3` wheel
 needed). A deterministic PLANAR axial grid (``hex_cell_id``;
 aperture-7 edge scaling matched to H3's res-8 mean edge ≈ 461 m) is
-internal only: it is the RING-MATH grid for kNN k_ring expansion and
-the PIP grid join's cover (its planar geometry is what the
-ring-distance guarantee is proven on). No public id comes from it.
+internal only: it keys the PIP grid join's cover, and its edge is the
+finest cell side of the kNN count pyramid. No public id comes from it.
 
 Reference parity: cell assignment generalizes the reference's
 grid-bucket assignment (src/lib.rs:427-444 grid, src/divide.rs:43-52
@@ -172,9 +171,9 @@ def s2_parent(cell_id, level: int) -> np.ndarray:
 
 # ------------------------------------------------------------ hex grid
 #
-# The PLANAR axial grid: internal only. knn_join's ring math
-# (hex_k_ring) and point_in_polygon_grid_join's cover (hex_cover_bbox)
-# key on it; no public cell id comes from it (that is hex_cell, H3).
+# The PLANAR axial grid: internal only. point_in_polygon_grid_join's
+# cover (hex_cover_bbox) keys on it, and knn_join's finest square side
+# is its edge; no public cell id comes from it (that is hex_cell, H3).
 
 # aperture-7 scaling calibrated to H3: res-8 mean hex edge ≈ 461.354 m
 # ≈ 0.0041444° at the equator ⇒ edge(res) = _EDGE0_DEG / √7^res
@@ -249,7 +248,7 @@ _HEX_DIRS = ((1, 0), (1, -1), (0, -1), (-1, 0), (-1, 1), (0, 1))
 
 def hex_ring(cell_id: int, k: int) -> list[int]:
     """Cell ids exactly ``k`` rings away (k=0 → [cell]); deterministic
-    enumeration order (the kNN expansion path, SURVEY §2.3 note)."""
+    enumeration order."""
     res, q, r = hex_unpack(np.asarray([cell_id]))
     res, q, r = int(res[0]), int(q[0]), int(r[0])
     if k == 0:
@@ -268,8 +267,7 @@ def hex_ring(cell_id: int, k: int) -> list[int]:
 
 
 def hex_k_ring(cell_id: int, k: int) -> list[int]:
-    """All planar cells within ``k`` rings (1 + 3k(k+1) cells): the
-    reference set for knn_join's Catalyst k_ring expansion."""
+    """All planar cells within ``k`` rings (1 + 3k(k+1) cells)."""
     out = []
     for ring in range(k + 1):
         out.extend(hex_ring(cell_id, ring))
@@ -376,92 +374,3 @@ def h3_cover_size(x0: float, y0: float, x1: float, y1: float, res: int = 8) -> i
     rows = int(math.ceil((lat1 - lat0) / step)) + 2
     cols = int(math.ceil((lon1 - lon0) / step)) + 2
     return max(rows, 0) * max(cols, 0)
-
-
-def _poly_intersects_bbox(verts, x0, y0, x1, y1) -> bool:
-    """Convex-ish polygon (lon, lat vertex list) vs axis-aligned bbox
-    intersection: any vertex in the box, any box corner in the polygon
-    (even-odd ray cast), or any edge pair crossing.
-
-    Boundary lons are unwrapped relative to the bbox center first: a
-    cell straddling the antimeridian yields raw lons jumping ~360°,
-    which planar tests read as a garbage polygon (round-5 ADVICE). A
-    pole-containing cell (lon span ≥ 180° even after unwrap — its
-    boundary winds around the pole) is handled by the latitude test
-    alone: such a cell covers every longitude poleward of its boundary
-    ring, so it intersects iff the bbox reaches its latitude band."""
-    ys = verts[:, 1]
-    cx = (x0 + x1) / 2.0
-    xs = (verts[:, 0] - cx + 180.0) % 360.0 + cx - 180.0
-    if xs.max() - xs.min() >= 180.0:
-        # winds around a pole: covers all lons poleward of the ring
-        if ys.mean() > 0:
-            return y1 >= ys.min()
-        return y0 <= ys.max()
-    if ((xs >= x0) & (xs <= x1) & (ys >= y0) & (ys <= y1)).any():
-        return True
-    # box corner inside polygon (even-odd rule)
-    n = len(verts)
-    for cx, cy in ((x0, y0), (x0, y1), (x1, y0), (x1, y1)):
-        inside = False
-        for i in range(n):
-            ax, ay = xs[i], ys[i]
-            bx, by = xs[(i + 1) % n], ys[(i + 1) % n]
-            if (ay > cy) != (by > cy):
-                t = (cy - ay) / (by - ay)
-                if cx < ax + t * (bx - ax):
-                    inside = not inside
-        if inside:
-            return True
-    # polygon edge crosses a box edge
-    box_edges = (((x0, y0), (x1, y0)), ((x1, y0), (x1, y1)),
-                 ((x1, y1), (x0, y1)), ((x0, y1), (x0, y0)))
-    def _seg_cross(p, q, r, t):
-        d1 = (q[0]-p[0])*(r[1]-p[1]) - (q[1]-p[1])*(r[0]-p[0])
-        d2 = (q[0]-p[0])*(t[1]-p[1]) - (q[1]-p[1])*(t[0]-p[0])
-        d3 = (t[0]-r[0])*(p[1]-r[1]) - (t[1]-r[1])*(p[0]-r[0])
-        d4 = (t[0]-r[0])*(q[1]-r[1]) - (t[1]-r[1])*(q[0]-r[0])
-        return (d1 * d2 < 0) and (d3 * d4 < 0)
-    for i in range(n):
-        a = (xs[i], ys[i])
-        b = (xs[(i + 1) % n], ys[(i + 1) % n])
-        for r, t in box_edges:
-            if _seg_cross(a, b, r, t):
-                return True
-    return False
-
-
-def h3_cover_bbox_exact(x0: float, y0: float, x1: float, y1: float, res: int = 8) -> list[int]:
-    """PROVABLY-COMPLETE bbox cover: exactly the cells whose boundary
-    polygon intersects the bbox, found by BFS over `h3core.grid_disk`
-    neighbors from seed cells inside the box. Completeness argument:
-    the set of cells intersecting a convex box is edge-connected (any
-    two intersecting cells are joined by a cell path along the box
-    region), and BFS only stops at cells that do NOT intersect — so
-    every intersecting cell is reached from any interior seed. No
-    sampling-step/min-edge calibration involved (round-5 ADVICE: the
-    sampled cover's guarantee rests on a worst-case-cell argument; this
-    variant is the proof-grade reference the sampled cover is tested
-    against, and the right choice when the cover is small). Assumes a
-    bbox that does not cross the antimeridian (same contract as
-    h3_cover_bbox)."""
-    import numpy as _np
-
-    seeds_lon = _np.array([x0, x1, x0, x1, (x0 + x1) / 2])
-    seeds_lat = _np.clip(_np.array([y0, y0, y1, y1, (y0 + y1) / 2]), -90, 90)
-    seed_cells = set(_h3core.latlng_to_cell(seeds_lon, seeds_lat, res).tolist())
-    out: set[int] = set()
-    frontier = list(seed_cells)
-    seen: set[int] = set(frontier)
-    while frontier:
-        nxt = []
-        for c in frontier:
-            verts = _h3core.cell_to_boundary(int(c))
-            if _poly_intersects_bbox(verts, x0, y0, x1, y1):
-                out.add(int(c))
-                for nb in _h3core._neighbors(int(c)):
-                    if nb not in seen:
-                        seen.add(nb)
-                        nxt.append(nb)
-        frontier = nxt
-    return sorted(out)

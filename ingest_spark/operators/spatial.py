@@ -1,5 +1,5 @@
 """Spatial operators: cell assignment, bbox query, point-in-polygon
-broadcast join, cell-local kNN with sorted ring expansion.
+broadcast join, cell-local kNN routed by per-cell point counts.
 
 These generalize the reference's only spatial read path — the eyros
 bbox-intersection query (S11, /root/reference/src/lib.rs:463-467,
@@ -21,21 +21,19 @@ tests/ingest.rs:29-34) — to the north_rule's operator set. Design:
   fact side streams; the dim side is a broadcast hash table — no
   shuffle of the big side.
 - kNN: one plan, ``knn_join`` (``knn_join_h3`` is the same function),
-  a provably-terminal TWO-PASS plan with no driver loop. Its ring join
-  keys on the planar hex grid it computes from (lon, lat), never on a
-  stored cell column, so it is exact at any latitude. Pass 1 seeds a
-  per-query ring radius from the query cell's local point density,
-  gathers k_ring(cell, R0) candidates (dimension-side explode — the
-  big point table shuffles once on cell id), and takes each query's
-  kth-candidate distance.
-  Pass 2 re-gathers with the ring radius R2 implied by that kth
-  distance via the geometric guarantee (any point outside rings 0..R
-  is at distance > edge·(1.5·(R+1) − 2)); because pass 1's kth over a
-  candidate SUBSET is ≥ the true kth, rings 0..R2 provably contain the
-  true top-k — no recheck round, no stragglers. Queries with < k
-  pass-1 candidates, or whose pass-2 ring would pass
-  ``cfg.knn_max_ring``, take an exact broadcast brute-force pass.
-  EXACT kNN, verified against the cross-join oracle knn_brute_force.
+  routed by per-cell point counts (GeoBlocks-style count
+  pre-aggregates). It keys on a square-grid pyramid it computes from
+  (lon, lat), never on a stored cell column, so it is exact at any
+  latitude. The queries go to the driver; one count job counts the
+  points in each query's 5x5 cell disk at every level; the driver picks
+  per query (vectorized, numpy) the finest level and smallest disk that
+  holds k points. Every point of a disk of Chebyshev radius r lies
+  within sqrt(2)*(r+1) cell sides of the query, and every point outside
+  radius R lies farther than R sides, so the probe ring
+  ceil(sqrt(2)*(r+1)) + 1 holds the exact top-k, ties included. One
+  lazy broadcast probe join on (level, cell) and a window top-k answer
+  every query; nothing is cached or checkpointed. EXACT kNN, verified
+  against the cross-join oracle knn_brute_force.
 """
 
 from __future__ import annotations
@@ -60,8 +58,8 @@ def hex_cell_col(lon, lat, res: int):
     in the hot path). Bit-exact vs the numpy kernel: identical IEEE op
     order, and Math.rint == np.rint (both round-half-even); no
     transcendentals involved (property-tested equal in test_cells.py).
-    The planar grid is an internal join key only: knn_join's ring math
-    and point_in_polygon_grid_join's cover key on it; no public cell id
+    The planar grid is an internal join key only:
+    point_in_polygon_grid_join's cover keys on it; no public cell id
     (``hex_cell``) comes from it."""
     import math as _m
 
@@ -377,6 +375,81 @@ def _knn_result(result: DataFrame, query_id: str, point_id: str) -> DataFrame:
     )
 
 
+# Square-grid count pyramid of the kNN router. Level l cells have side
+# hex_edge_deg(res) * 4**l; the levels stop below a 360-degree side,
+# and one last level is a single cell holding every point.
+_KNN_LEVEL_STEP = 4.0
+# Chebyshev radius of the disk whose point count certifies a level.
+_KNN_COUNT_RING = 2
+# Probe ring for a query certified by disk radius r: every point in
+# that disk is within sqrt(2)*(r+1) sides of the query, every point
+# outside probe ring R is farther than R sides, and the +1 is slack for
+# the rounding of floor(x / side).
+_KNN_PROBE_RING = np.array(
+    [math.ceil(math.sqrt(2.0) * (r + 1)) + 1 for r in range(_KNN_COUNT_RING + 1)]
+)
+
+
+def _knn_sides(res: int) -> list[float]:
+    """Cell sides of the finite pyramid levels, finest first."""
+    sides = [cell_fn.hex_edge_deg(res)]
+    while sides[-1] * _KNN_LEVEL_STEP < 360.0:
+        sides.append(sides[-1] * _KNN_LEVEL_STEP)
+    return sides
+
+
+def _knn_point_cells(pts: DataFrame, sides: list[float], levels) -> DataFrame:
+    """One (_lvl, _cell) row per point and level in ``levels``. The key
+    floor(x/s)*2**32 + floor(y/s) is additive in the two cell indexes;
+    level len(sides) is the single world cell 0. Built as one SQL
+    expression, since a Column tree costs a JVM round trip per node;
+    18 significant digits round-trip each side exactly."""
+    def key(lvl):
+        if lvl == len(sides):
+            return "0L"
+        s = f"{sides[lvl]:.17e}D"
+        return f"shiftleft(CAST(floor(_px / {s}) AS BIGINT), 32) + CAST(floor(_py / {s}) AS BIGINT)"
+
+    cells = ", ".join(f"struct({lvl} AS _lvl, {key(lvl)} AS _cell)" for lvl in levels)
+    return pts.select("_pid", "_px", "_py", F.expr(f"inline(array({cells}))"))
+
+
+def _knn_query_cells(qx: np.ndarray, qy: np.ndarray, sides: list[float]) -> np.ndarray:
+    """The driver twin of _knn_point_cells: (n_queries, levels) keys,
+    the world level last. Same IEEE division and floor as the JVM."""
+    cols = [
+        (np.floor(qx / s).astype(np.int64) << 32) + np.floor(qy / s).astype(np.int64)
+        for s in sides
+    ]
+    cols.append(np.zeros(len(qx), dtype=np.int64))
+    return np.stack(cols, axis=1)
+
+
+def _offsets(ring: int) -> tuple[np.ndarray, np.ndarray]:
+    """Key offsets of the (2*ring+1)**2 cells of a Chebyshev disk, and
+    each cell's Chebyshev radius."""
+    d = np.arange(-ring, ring + 1, dtype=np.int64)
+    dx, dy = np.meshgrid(d, d, indexing="ij")
+    return ((dx << 32) + dy).ravel(), np.maximum(np.abs(dx), np.abs(dy)).ravel()
+
+
+def _knn_route(per_cell: np.ndarray, cheb: np.ndarray, k: int):
+    """Per query, the finest level and then the smallest count disk
+    holding >= k points: (level, probe ring). ``per_cell`` holds the
+    (queries, finite levels, disk cells) point counts and ``cheb`` each
+    disk cell's Chebyshev radius. A query no level certifies gets the
+    world level (one past the last) and ring 0."""
+    nq, levels, _ = per_cell.shape
+    rings = len(_KNN_PROBE_RING)
+    held = np.stack(
+        [per_cell[:, :, cheb <= r].sum(axis=2) for r in range(rings)], axis=2
+    ).reshape(nq, levels * rings) >= k
+    first = held.argmax(axis=1)
+    found = held.any(axis=1)
+    level = np.where(found, first // rings, levels)
+    return level, np.where(found, _KNN_PROBE_RING[first % rings], 0)
+
+
 def knn_join(
     points: DataFrame,
     queries: DataFrame,
@@ -387,187 +460,78 @@ def knn_join(
     query_id: str = "qid",
     stats_out: dict | None = None,
 ) -> DataFrame:
-    """Exact kNN of each query against ``points`` via hex-cell ring
-    expansion. Both inputs need (lon, lat) columns. Returns
+    """Exact kNN of each query against ``points``, routed by per-cell
+    point counts. Both inputs need (lon, lat) columns. Returns
     (qid, id, dist, rank) with rank 1..k ordered by (dist, id) —
-    deterministic tiebreak.
+    deterministic tiebreak. ``cfg`` is accepted for callers that pass
+    it; nothing in it is read.
 
-    Scale shape: two passes, no driver round loop. Pass 1 probes each
-    query's seeded rings; pass 2 re-probes only the queries pass 1
-    could not prove exact, at the ring their pass-1 kth distance
-    demands. In each pass the big point table joins on cell id and a
-    query touches only 1+3R(R+1) cells. Stragglers (sparse regions)
-    fall back to a broadcast brute-force pass over those queries only.
-
-    Ring seeding is PER QUERY from the query cell's own point count
-    (one narrow two-column shuffle of the point table): a clustered
-    query starts at ring 1, a sparse one jumps ahead — no global
-    density estimate to overshoot on skewed data, and the first
-    explode stays bounded by the seed cap. The point and pass-1 caches
-    are released before returning (the result is materialized once via
-    an eager localCheckpoint, so the union over the passes never
-    recomputes unpersisted data).
+    The queries are collected to the driver. One count job then counts
+    the points in each query's 5x5 cell disk at every level of a square
+    cell pyramid (finest side hex_edge_deg(res), x4 per level, last a
+    single world cell). Each query takes the finest level and smallest
+    disk holding >= k points; the probe ring that disk implies holds
+    the exact top-k, ties included. The returned frame is lazy: one
+    probe join on (level, cell), broadcast since the probe table is a
+    small driver-built relation, and the top-k window, run by the
+    caller's action. ``stats_out`` gets ``n_queries`` and
+    ``n_brute``: the queries no finite level certifies, whose probe is
+    the whole table (at most when it holds fewer than k points).
     """
-    edge = cell_fn.hex_edge_deg(res)
+    spark = points.sparkSession
+    sides = _knn_sides(res)
+    world = len(sides)
+    pts = _knn_points(points, point_id)
+    qtype = queries.schema[query_id].dataType
+    q = _knn_queries(queries, query_id).collect()
+    nq = len(q)
+    qid = pd.Series([r[0] for r in q]).to_numpy()
+    qx, qy = (np.array([r[i] for r in q], dtype=np.float64) for i in (1, 2))
+    qcell = _knn_query_cells(qx, qy, sides)
 
-    # The projected 4-column point table is consumed once per pass
-    # (candidate join) plus once by the cell-count seed — persist it
-    # until the result is materialized (MEMORY_AND_DISK default: spills,
-    # never OOMs) so the upstream scan runs exactly once.
-    pts = _knn_points(points, point_id).withColumn(
-        # BUILTIN planar grid unconditionally: the ring-expansion
-        # geometry (hex_k_ring + the edge-distance guarantee) is a
-        # property of this grid; the cell is an internal join key,
-        # never a user-facing index (same rule as the PIP grid join)
-        "_pcell", hex_cell_col(F.col("_px"), F.col("_py"), res)
-    ).persist()
-
-    qs = _knn_queries(queries, query_id).withColumn(
-        "_qcell", hex_cell_col(F.col("_qx"), F.col("_qy"), res)
+    # count job: points in each distinct (level, cell) of every disk
+    off, cheb = _offsets(_KNN_COUNT_RING)
+    disk = qcell[:, :world, None] + off[None, None, :]
+    lvl = np.broadcast_to(np.arange(world)[None, :, None], disk.shape)
+    uniq, inv = np.unique(
+        np.stack([lvl.ravel(), disk.ravel()], axis=1), axis=0, return_inverse=True
     )
-
-    # Per-query ring seed from the query cell's own point count: the
-    # goal is resolving in pass 1 (pass 2 is a second probe join), so
-    # invert the guarantee itself. At local density d = local_cn /
-    # cell_area the expected kth-NN radius is r_k = sqrt(k/(pi*d)) =
-    # edge*sqrt(1.5*sqrt(3)*k/(pi*local_cn)); pass 1 resolves when
-    # edge*(1.5(R+1)-2) >= r_k, i.e. R >= (r_k/edge + 2)/1.5 - 1. A
-    # 1.5x safety factor absorbs local fluctuation; the cap bounds the
-    # first explode; empty query cells (local=0) hit the cap. The
-    # guarantee gate keeps every answer exact regardless of the seed.
-    cnts = pts.groupBy("_pcell").agg(F.count("*").alias("_cn"))
-    local = F.greatest(F.coalesce(F.col("_cn"), F.lit(0)), F.lit(1)).cast("double")
-    rk = F.lit(1.5) * F.sqrt(F.lit(1.5 * math.sqrt(3.0) * k / math.pi) / local)
-    seed = F.ceil((rk + F.lit(2.0)) / F.lit(1.5) - F.lit(1.0)).cast("int")
-    seed_cap = int(min(max(cfg.knn_max_ring // 2, 1), 8))
-    remaining = (
-        qs.join(cnts.withColumnRenamed("_pcell", "_qcell"), "_qcell", "left")
-        .withColumn("_ring", F.least(F.greatest(seed, F.lit(1)), F.lit(seed_cap)))
-        .drop("_cn")
-    )
-
-    max_ring = cfg.knn_max_ring
-
-    # Two passes, ONE job — no driver round loop (every round trip is a
-    # full Spark job; the loop was the measured cost, not the data):
-    #
-    # Pass 1 probes the seeded rings. The distance guarantee: any point
-    # outside rings 0..R sits in a cell at hex distance >= R+1; on this
-    # pointy-top grid the minimum center spacing at hex distance m is
-    # 1.5*m*edge (the diagonal direction — NOT sqrt(3)*m, which only
-    # holds along the straight axes); subtract one circumradius (=edge)
-    # each for the query's and the point's offset from their cell
-    # centers. Verified against adversarial layouts in test_spatial.py.
-    #
-    # Pass 2 is PROVABLY terminal for every query that found >= k
-    # candidates: its pass-1 kth distance upper-bounds the true kth
-    # (subset top-k >= global top-k), so the ring R2 with
-    # guarantee(R2) >= kth_1 satisfies kth_2 <= kth_1 <= guarantee(R2)
-    # — no re-check needed. Queries with < k pass-1 candidates (near-
-    # empty regions) or R2 > knn_max_ring fall back to an exact
-    # brute-force pass over just those queries.
-    def _guar(ring_col):
-        return F.lit(edge) * (F.lit(1.5) * (ring_col + 1) - F.lit(2.0))
-
-    def _probe(qdf: DataFrame) -> DataFrame:
-        # k_ring as PURE Catalyst (guide §4.1 — no Python stage): the
-        # hex-distance-≤R disk on axial coords is exactly
-        # {(dq, dr): dq ∈ [-R, R], dr ∈ [max(-R, -dq-R), min(R, -dq+R)]}
-        # (same cell set hex_k_ring enumerates ring-by-ring; the join
-        # key is a set, so enumeration order is irrelevant), and the
-        # packed cell id is additive in the q/r fields — neighbor id =
-        # cell + (dq << 28) + dr (no unpack/repack; field overflow is
-        # impossible for on-earth coords with the 2^27 bias).
-        ring = F.col("_ring")
-        dq = F.col("_dq")
-        exp = (
-            qdf.withColumn("_dq", F.explode(F.sequence(-ring, ring)))
-            .withColumn(
-                "_dr",
-                F.explode(
-                    F.sequence(
-                        F.greatest(-ring, -dq - ring),
-                        F.least(ring, -dq + ring),
-                    )
-                ),
-            )
-            .select(
-                "_qid", "_qx", "_qy", "_ring",
-                (
-                    F.col("_qcell")
-                    + F.shiftleft(dq.cast("long"), 28)
-                    + F.col("_dr").cast("long")
-                ).alias("_pcell"),
-            )
+    counts = np.zeros(len(uniq), dtype=np.int64)
+    if nq:
+        cells = spark.createDataFrame(
+            pd.DataFrame({"_lvl": uniq[:, 0].astype(np.int32), "_cell": uniq[:, 1],
+                          "_slot": np.arange(len(uniq), dtype=np.int64)}),
+            "_lvl int, _cell long, _slot long",
         )
-        return _topk(exp.join(pts, "_pcell", "inner"), k)
-
-    topk1 = _probe(remaining).cache()
-    stat1 = topk1.groupBy("_qid").agg(
-        F.count("*").alias("_n1"), F.max("dist").alias("_kth1")
-    )
-    st = remaining.join(stat1, "_qid", "left").withColumn(
-        "_n1", F.coalesce("_n1", F.lit(0))
-    ).cache()
-    resolved = (F.col("_n1") == k) & (F.col("_kth1") <= _guar(F.col("_ring")))
-    need_ring = F.greatest(
-        F.ceil(
-            (F.col("_kth1") / F.lit(edge) + F.lit(2.0)) / F.lit(1.5) - F.lit(1.0)
-        ).cast("int"),
-        F.col("_ring") + 1,
-    )
-    is_pass2 = (~resolved) & (F.col("_n1") == k) & (need_ring <= max_ring)
-    is_brute = (~resolved) & ((F.col("_n1") < k) | (need_ring > max_ring))
-    # one tiny driver aggregate decides which branches exist, so the
-    # common all-resolved-in-pass-1 case pays exactly two jobs total
-    # (this stat + the final materialization) and no pass-2/brute plans
-    tri = st.agg(
-        F.sum(F.when(resolved, 1).otherwise(0)).alias("nres"),
-        F.sum(F.when(is_pass2, 1).otherwise(0)).alias("np2"),
-        F.sum(F.when(is_brute, 1).otherwise(0)).alias("nbr"),
-    ).first()
-    n_res, n_p2, n_br = (tri[c] or 0 for c in ("nres", "np2", "nbr"))
+        rows = (
+            _knn_point_cells(pts, sides, range(world))
+            .join(cells, ["_lvl", "_cell"])
+            .groupBy("_slot").count().collect()
+        )
+        if rows:
+            slot, n = np.array([(r[0], r[1]) for r in rows], dtype=np.int64).T
+            counts[slot] = n
+    level, ring = _knn_route(counts[inv.reshape(-1)].reshape(nq, world, len(off)), cheb, k)
     if stats_out is not None:
-        stats_out.update(
-            {"n_queries": int(n_res) + int(n_p2) + int(n_br),
-             "n_pass2": int(n_p2), "n_brute": int(n_br)}
-        )
+        stats_out.update({"n_queries": nq, "n_brute": int((level == world).sum())})
 
-    parts: list[DataFrame] = []
-    if n_p2 == 0 and n_br == 0:
-        # covers the empty-queries case too: topk1 is then empty with
-        # the right schema
-        parts.append(topk1.select("_qid", "_pid", "dist", "rank"))
-    elif n_res > 0:
-        parts.append(
-            topk1.join(st.where(resolved).select("_qid"), "_qid", "inner").select(
-                "_qid", "_pid", "dist", "rank"
-            )
-        )
-    if n_p2 > 0:
-        pass2_q = st.where(is_pass2).select(
-            "_qid", "_qx", "_qy", "_qcell", need_ring.alias("_ring")
-        )
-        parts.append(_probe(pass2_q).select("_qid", "_pid", "dist", "rank"))
-    if n_br > 0:
-        brute_q = st.where(is_brute).select("_qid", "_qx", "_qy")
-        parts.append(_topk(brute_q.crossJoin(pts), k).select("_qid", "_pid", "dist", "rank"))
-
-    result = parts[0]
-    for p in parts[1:]:
-        result = result.unionByName(p)
-    out = _knn_result(result, query_id, point_id)
-    # materialize once (truncating lineage), then release the caches:
-    # consumers read the checkpointed blocks, never the unpersisted plan
-    out = out.localCheckpoint(eager=True)
-    topk1.unpersist()
-    st.unpersist()
-    pts.unpersist()
-    return out
+    # probe table: each query's (2R+1)**2 cells at its level
+    off, cheb = _offsets(int(_KNN_PROBE_RING.max()))
+    qi, oi = np.nonzero(cheb[None, :] <= ring[:, None])
+    probe = spark.createDataFrame(
+        pd.DataFrame({
+            "_qid": qid[qi], "_qx": qx[qi], "_qy": qy[qi],
+            "_lvl": level[qi].astype(np.int32), "_cell": qcell[qi, level[qi]] + off[oi],
+        }),
+        f"_qid {qtype.simpleString()}, _qx double, _qy double, _lvl int, _cell long",
+    )
+    used = sorted(set(level.tolist())) or [world]
+    cand = _knn_point_cells(pts, sides, used).join(probe, ["_lvl", "_cell"])
+    return _knn_result(_topk(cand, k), query_id, point_id)
 
 
 # The name tables keyed by the H3 ``hex_cell`` are queried under. The
-# ring plan reads only (lon, lat), so it needs no plan of its own.
+# kNN reads only (lon, lat), so it needs no plan of its own.
 knn_join_h3 = knn_join
 
 

@@ -329,12 +329,14 @@ class IcebergMetadataBackend(SnapshotBackend):
     # ------------------------------------------------ commit protocol
 
     def _publish(self, path: str, md: dict) -> int:
-        """Write metadata as the next version with an atomic
+        """Write metadata as the version after the one ``md`` was read
+        at (``_version``; 1 for a new table) with an atomic
         fail-if-exists link (the HadoopTableOperations protocol).
-        Raises CommitConflict if a racer won the version."""
+        Raises CommitConflict if a racer published that version first,
+        so a stale base is re-read rather than published over."""
         meta = self._meta_dir(path)
         os.makedirs(meta, exist_ok=True)
-        version = (self._versions(path)[-1] + 1) if self._versions(path) else 1
+        version = md.get("_version", 0) + 1
         md = {k: v for k, v in md.items() if not k.startswith("_")}
         tmp = os.path.join(meta, f".tmp-{_uuid.uuid4().hex}.json")
         with open(tmp, "w") as f:

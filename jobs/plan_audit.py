@@ -68,6 +68,9 @@ def main() -> None:
         ("asof_join", ["column_pruned_scan"], ["cartesian_product"]),
         ("interval_join", ["whole_stage_codegen"], ["cartesian_product"]),
         ("pip_grid_join", [], ["cartesian_product"]),
+        # the kNN result is lazy: its probe must stay a broadcast key
+        # join, never a cross join
+        ("knn_ring_expansion", ["broadcast_join"], ["cartesian_product"]),
         # the md5 threshold is a computed predicate — not scan-pushable
         # by design; pruned read schema + codegen are the properties
         ("sample_det", ["column_pruned_scan", "whole_stage_codegen"], ["cartesian_product"]),

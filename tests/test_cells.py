@@ -159,36 +159,6 @@ class TestHexJvmExprParity:
             assert (got == want).all()
 
 
-class TestPolyBboxAntimeridianPole:
-    """Round-6 (ADVICE): _poly_intersects_bbox unwraps boundary lons
-    around the bbox center, so antimeridian-straddling cells test
-    correctly, and pole-winding boundaries fall back to the latitude
-    band test."""
-
-    def test_antimeridian_cell_intersects_near_180(self):
-        from ingest_spark.functions import h3core
-        from ingest_spark.functions.cells import _poly_intersects_bbox
-        c = int(h3core.latlng_to_cell(
-            np.array([179.999]), np.array([0.0]), 5)[0])
-        b = h3core.cell_to_boundary(c)
-        # raw lons jump ~360° across the seam
-        assert b[:, 0].max() - b[:, 0].min() > 180
-        assert _poly_intersects_bbox(b, 179.5, -1.0, 180.0, 1.0)
-        assert _poly_intersects_bbox(b, -180.0, -1.0, -179.5, 1.0)
-        assert not _poly_intersects_bbox(b, 170.0, -1.0, 171.0, 1.0)
-
-    def test_pole_winding_cell_latitude_band(self):
-        from ingest_spark.functions import h3core
-        from ingest_spark.functions.cells import _poly_intersects_bbox
-        c = int(h3core.latlng_to_cell(
-            np.array([0.0]), np.array([89.999]), 1)[0])
-        b = h3core.cell_to_boundary(c)
-        # boundary winds most of the way around the pole
-        assert b[:, 0].max() - b[:, 0].min() > 180
-        assert _poly_intersects_bbox(b, 100.0, 89.0, 110.0, 90.0)
-        assert not _poly_intersects_bbox(b, 100.0, 60.0, 110.0, 61.0)
-
-
 # a box near the pole whose points fall in 2 res-8 cells; a lon pad of
 # 2.5 edges in degrees reaches only one of them
 POLAR_BOX = (-135.9457, 89.4320, -135.9414, 89.4363)

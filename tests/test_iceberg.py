@@ -182,6 +182,19 @@ class TestIcebergBackend:
         b.commit(_df(spark, [(2, "b")]), path)
         assert {r.id for r in b.read(spark, path).collect()} == {2}
 
+    def test_publish_over_a_stale_base_conflicts(self, tmp_path):
+        """A committer whose metadata went stale while it wrote its
+        snapshot must lose the version race, not publish on top of the
+        racer and drop the racer's snapshot."""
+        b = IcebergMetadataBackend()
+        path = str(tmp_path / "tbl")
+        b._publish(path, {"snapshots": []})
+        md = b.current_metadata(path)
+        b._publish(path, {**md, "snapshots": [111]})
+        with pytest.raises(CommitConflict):
+            b._publish(path, {**md, "snapshots": [222]})
+        assert b.current_metadata(path)["snapshots"] == [111]
+
     def test_partitioned_commit_and_read(self, spark, tmp_path):
         b = IcebergMetadataBackend()
         path = str(tmp_path / "ptbl")

@@ -4,8 +4,8 @@ A task runs one Python worker per Python evaluation node in its stage.
 Two such nodes chained inside one stage hold two workers per task slot
 (each a full interpreter with numpy/pandas/pyarrow), and a UDF that two
 nodes evaluate runs its kernel twice. The executed plans of the feature
-build and the changeset recompute must have neither shape; the
-checkpointed kNN frame has no Python node at all.
+build and the changeset recompute must have neither shape; the kNN
+result plan has no Python node at all.
 """
 
 import glob
@@ -109,37 +109,24 @@ def test_changeset_on_ingest_table_runs_one_python_node_per_stage(spark, tmp_pat
     assert python_stage_faults(merged) == []
 
 
-def test_knn_checkpointed_frame_has_no_python_node(spark, monkeypatch):
+def test_knn_result_plan_has_no_python_node(spark):
     rng = np.random.default_rng(5)
     lon, lat = rng.uniform(-15, 15, 1000), rng.uniform(-15, 15, 1000)
     pts = spark.createDataFrame(
         [(int(i), float(a), float(b)) for i, (a, b) in enumerate(zip(lon, lat))],
         "id long, lon double, lat double",
     )
-    # some queries take the pass-2 ring; the far one has no candidates
-    # in its seeded rings and goes brute, so the result frame holds
-    # every part the plan builds
+    # the far query is routed by a coarse level's counts, the others by
+    # fine ones, so the probe reads several pyramid levels
     qs = spark.createDataFrame(
         [(i, float(lon[i]), float(lat[i])) for i in range(0, 1000, 100)] + [(-1, 100.0, 60.0)],
         "qid long, lon double, lat double",
     )
-
-    frames = []
-    cls = type(pts)  # the classic DataFrame, not the pyspark.sql base
-    checkpoint = cls.localCheckpoint
-
-    def capture(self, *a, **kw):
-        out = checkpoint(self, *a, **kw)
-        frames.append(self)
-        return out
-
-    monkeypatch.setattr(cls, "localCheckpoint", capture)
     stats: dict = {}
-    assert knn_join_h3(pts, qs, k=5, res=3, stats_out=stats).count() == 11 * 5
-    assert stats["n_pass2"] > 0 and stats["n_brute"] > 0, stats
-    assert len(frames) == 1
-    # the cached point and pass-1 relations are printed inside the plan
-    plan = frames[0]._jdf.queryExecution().executedPlan().toString()
+    out = knn_join_h3(pts, qs, k=5, res=3, stats_out=stats)
+    assert out.count() == 11 * 5
+    assert stats["n_queries"] == 11, stats
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert not _PY_EVAL.search(plan), plan
 
 

@@ -1,4 +1,4 @@
-"""Cell assignment, bbox query, PIP broadcast join, kNN ring expansion."""
+"""Cell assignment, bbox query, PIP broadcast join, count-routed kNN."""
 
 import numpy as np
 import pytest
@@ -91,54 +91,93 @@ class TestKNN:
         w = {(r.qid, r.rank): r.id for r in want.collect()}
         assert g == w
 
-    def test_ring_guarantee_sound_and_old_bound_unsound(self):
-        """Numeric verification of the exactness bound used by knn_join.
+    def test_square_grid_bounds_sound(self):
+        """Numeric check of the two bounds knn_join's routing uses, on
+        the engine's own cell keys (level 0 at res 6).
 
-        For every R in {1, 2, 4}: scan a dense grid of candidate points
-        around a query cell; every point whose cell is OUTSIDE
-        k_ring(qcell, R) must be at distance >= edge*(1.5*(R+1)-2) from
-        every position inside the query cell. Also demonstrates that
-        the previous bound edge*((R+1)*sqrt(3)-2) is violated in the
-        diagonal direction (the round-1 ADVICE finding).
+        For each count ring r: every point in the r-disk of a query's
+        cell is within sqrt(2)*(r+1) sides of every position in that
+        cell, and the bound is nearly reached (the corner-to-corner
+        diagonal). For the probe ring R the routing takes for r: every
+        point outside the R-disk is farther than R sides, and R sides
+        exceed the first bound by at least one side of slack.
         """
-        import itertools
-        from ingest_spark.functions import cells as C
-
         res = 6
-        edge = C.hex_edge_deg(res)
-        qcell = int(C.hex_cell_id(np.array([0.31 * edge]), np.array([0.17 * edge]), res)[0])
-        cx, cy = C.hex_center(np.array([qcell]))
-        cx, cy = float(cx[0]), float(cy[0])
+        sides = spatial._knn_sides(res)
+        s = sides[0]
 
-        # positions inside the query cell (dense sub-grid, filtered by cell id)
-        g = np.linspace(-1.0, 1.0, 21) * edge
+        def key(x, y):
+            return spatial._knn_query_cells(x, y, sides)[:, 0]
+
+        def dist_range(qx, qy, px, py):
+            lo, hi = np.inf, 0.0
+            for i in range(0, len(qx), 64):
+                d = np.hypot(px[None, :] - qx[i:i + 64, None], py[None, :] - qy[i:i + 64, None])
+                lo, hi = min(lo, float(d.min())), max(hi, float(d.max()))
+            return lo, hi
+
+        # positions inside the query cell, off the origin
+        cx, cy = 3 * s, -2 * s
+        g = (np.arange(21) + 0.5) / 21 * s
         qx, qy = np.meshgrid(cx + g, cy + g)
         qx, qy = qx.ravel(), qy.ravel()
-        inside_q = C.hex_cell_id(qx, qy, res) == qcell
-        qx, qy = qx[inside_q], qy[inside_q]
-        assert len(qx) > 50
+        qkey = key(np.array([cx + 0.5 * s]), np.array([cy + 0.5 * s]))[0]
+        assert (key(qx, qy) == qkey).all()
+        # candidate points 0.1 side apart, 9 cells round the query cell
+        gg = (np.arange(-90, 100) + 0.5) / 10 * s
+        px, py = np.meshgrid(cx + gg, cy + gg)
+        px, py = px.ravel(), py.ravel()
+        pkey = key(px, py)
 
-        for ring in (1, 2, 4):
-            ring_set = set(C.hex_k_ring(qcell, ring))
-            span = (ring + 3) * 2.0 * edge
-            gg = np.linspace(-span, span, 301)
-            px, py = np.meshgrid(cx + gg, cy + gg)
-            px, py = px.ravel(), py.ravel()
-            pcell = C.hex_cell_id(px, py, res)
-            outside = ~np.isin(pcell, np.fromiter(ring_set, dtype=np.int64))
-            px, py = px[outside], py[outside]
-            # min over all (query position, outside point) pairs
-            d2 = (px[None, :] - qx[:, None]) ** 2 + (py[None, :] - qy[:, None]) ** 2
-            min_dist = float(np.sqrt(d2.min()))
-            new_bound = edge * (1.5 * (ring + 1) - 2.0)
-            old_bound = edge * ((ring + 1) * np.sqrt(3.0) - 2.0)
-            assert min_dist >= new_bound, (
-                f"R={ring}: new bound {new_bound:.6g} unsound, saw {min_dist:.6g}"
+        for r, probe in enumerate(spatial._KNN_PROBE_RING):
+            off, _ = spatial._offsets(r)
+            inside = np.isin(pkey, qkey + off)
+            assert inside.sum() == (2 * r + 1) ** 2 * 100
+            _, max_in = dist_range(qx, qy, px[inside], py[inside])
+            bound = np.sqrt(2.0) * (r + 1) * s
+            assert 0.9 * bound < max_in <= bound, (r, max_in, bound)
+
+            off, _ = spatial._offsets(int(probe))
+            outside = ~np.isin(pkey, qkey + off)
+            min_out, _ = dist_range(qx, qy, px[outside], py[outside])
+            assert probe * s < min_out < (probe + 0.2) * s, (r, probe, min_out)
+            assert (probe - 1) * s >= bound, (r, probe)
+
+    def test_point_cells_match_driver_twin(self, spark):
+        """The JVM cell keys of the points equal the numpy keys the
+        driver gives the queries, at every level, on cell boundaries
+        and negative coordinates too."""
+        rng = np.random.default_rng(3)
+        for res in (0, 6, 12):
+            sides = spatial._knn_sides(res)
+            x = np.concatenate([rng.uniform(-180, 180, 500), rng.integers(-50, 50, 100) * sides[0]])
+            y = np.concatenate([rng.uniform(-90, 90, 500), rng.integers(-50, 50, 100) * sides[1]])
+            pts = spark.createDataFrame(
+                [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(x, y))],
+                "_pid long, _px double, _py double",
             )
-            assert min_dist < old_bound, (
-                f"R={ring}: expected the old sqrt(3) bound {old_bound:.6g} to be "
-                f"violated (adversarial diagonal), but min outside dist is {min_dist:.6g}"
-            )
+            got = spatial._knn_point_cells(pts, sides, range(len(sides) + 1)).toPandas()
+            got = got.sort_values(["_pid", "_lvl"])["_cell"].to_numpy().reshape(len(x), -1)
+            assert (got == spatial._knn_query_cells(x, y, sides)).all(), res
+
+    def test_vectorized_routing_matches_loop(self):
+        """_knn_route against the per-query loop it replaces, on random
+        sparse disk counts (many queries certified late or never)."""
+        rng = np.random.default_rng(13)
+        _, cheb = spatial._offsets(spatial._KNN_COUNT_RING)
+        per_cell = rng.poisson(0.15, (300, 6, len(cheb))) * rng.integers(0, 3, (300, 6, 1))
+        for k in (1, 3, 8):
+            level, ring = spatial._knn_route(per_cell, cheb, k)
+            for i in range(len(per_cell)):
+                want = (6, 0)
+                for lvl in range(6):
+                    held = [per_cell[i, lvl, cheb <= r].sum() >= k
+                            for r in range(spatial._KNN_COUNT_RING + 1)]
+                    if any(held):
+                        want = (lvl, int(spatial._KNN_PROBE_RING[held.index(True)]))
+                        break
+                assert (level[i], ring[i]) == want, (k, i)
+            assert (level == 6).any() and (level < 6).any()
 
     def test_knn_adversarial_diagonal_layout(self, spark):
         """End-to-end: a decoy inside ring 1 whose distance is under the
@@ -565,7 +604,7 @@ class TestKnnFallbackVisibility:
         stats: dict = {}
         out = knn_join_h3(pts, qs, k=5, res=3, stats_out=stats)
         assert out.count() == 3  # fewer than k points exist
-        assert stats["n_brute"] == 1 and stats["n_pass2"] == 0
+        assert stats["n_brute"] == 1
 
     def test_planar_stats_out(self, spark):
         from ingest_spark.operators.spatial import knn_join
@@ -584,6 +623,54 @@ class TestKnnFallbackVisibility:
         knn_join(pts, qs, k=3, res=3, stats_out=stats).count()
         assert stats["n_queries"] == qs.count()
         assert stats["n_brute"] == 0
+
+
+    def test_queries_in_empty_cells_routed_without_brute(self, spark):
+        """Half the queries sit far from every point, in cells (and
+        5x5 disks) the fine levels hold nothing in: a coarser level's
+        counts route them, so none probes the whole table."""
+        from ingest_spark.operators.spatial import knn_brute_force, knn_join
+        rng = np.random.default_rng(29)
+        lon = rng.uniform(-2, 2, 2000)
+        lat = rng.uniform(-2, 2, 2000)
+        pts = spark.createDataFrame(
+            [(int(i), float(a), float(b)) for i, (a, b) in
+             enumerate(zip(lon, lat))],
+            "id long, lon double, lat double",
+        )
+        near = [(i, float(lon[i]), float(lat[i])) for i in range(0, 2000, 200)]
+        far = [(10_000 + i, float(x), float(y)) for i, (x, y) in enumerate(
+            zip(rng.uniform(20, 60, 10), rng.uniform(-40, 40, 10)))]
+        qs = spark.createDataFrame(near + far, "qid long, lon double, lat double")
+        stats: dict = {}
+        got = knn_join(pts, qs, k=5, res=6, stats_out=stats)
+        key = lambda df: [(r.qid, r.id, r.rank) for r in df.orderBy("qid", "rank").collect()]  # noqa: E731
+        assert key(got) == key(knn_brute_force(pts, qs, k=5))
+        assert stats == {"n_queries": 20, "n_brute": 0}
+
+
+class TestKnnPlan:
+    def test_few_jobs_and_nothing_persisted(self, spark, count_jobs):
+        """A kNN runs a bounded number of Spark jobs whatever its
+        routing, and leaves no cached or checkpointed data behind."""
+        from ingest_spark.operators.spatial import knn_join
+        rng = np.random.default_rng(5)
+        lon, lat = rng.uniform(-15, 15, 1000), rng.uniform(-15, 15, 1000)
+        pts = spark.createDataFrame(
+            [(int(i), float(a), float(b)) for i, (a, b) in enumerate(zip(lon, lat))],
+            "id long, lon double, lat double",
+        )
+        qs = spark.createDataFrame(
+            [(i, float(lon[i]), float(lat[i])) for i in range(0, 1000, 100)] + [(-1, 100.0, 60.0)],
+            "qid long, lon double, lat double",
+        )
+        sc = spark.sparkContext
+        persisted = set(sc._jsc.getPersistentRDDs().keySet())
+        rows = []
+        jobs = count_jobs("knn_plan", lambda: rows.extend(knn_join(pts, qs, k=5, res=3).collect()))
+        assert len(rows) == 11 * 5
+        assert jobs <= 7, jobs
+        assert set(sc._jsc.getPersistentRDDs().keySet()) == persisted
 
 
 class TestPipColParity:
